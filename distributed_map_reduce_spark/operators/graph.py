@@ -64,7 +64,7 @@ class _scoped_shuffle_width:
     fixed per-partition cost of each round's map side, so a dup-graph
     round was overhead-dominated (measured ~27% loop time saved at
     sf0.1 with 256 edges). Scoping the conf — same pattern as
-    streaming's run_available_now — keeps the width proportional to
+    streaming's state_partitions — keeps the width proportional to
     data: a 100 TB pair graph (billions of edges) still gets thousands
     of partitions. Restores the session value on exit; the DataFrame a
     caller gets back re-plans under the restored conf."""

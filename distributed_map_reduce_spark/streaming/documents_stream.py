@@ -5,8 +5,9 @@ so the curation passes (quality rules, PII, dedup) must run as
 Structured Streaming jobs over arriving files — not only as batch
 backfills. This module streams the documents parquet through the SAME
 stateless rule expressions the batch operators use (the projection is
-shared verbatim — one codepath, two execution modes) and drains with
-Trigger.availableNow so the DuckDB oracle gate covers the streaming
+shared verbatim — one codepath, two execution modes) and drains it
+through ``events_stream.drain`` (Trigger.availableNow into a memory
+sink, self-cleaning) so the DuckDB oracle gate covers the streaming
 path too (same twin methodology as streaming/events_stream.py; the
 reference's analog is re-running its apps over a grown input set,
 /root/reference/src/main/test-mr.sh re-invocations).
@@ -19,12 +20,11 @@ sink instead of the in-memory test sink.
 from __future__ import annotations
 
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events_stream import run_available_now
+from .events_stream import drain, state_partitions
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,8 +57,6 @@ def q114_streaming_quality_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.partitioning import widen_for_rowlocal
     from ..operators.textanalysis import gopher_funnel, gopher_rule_frame
 
-    table = f"stream_q114_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q114_stream_ckpt_")
     # Widen the single-file micro-batch before the rule projection (the
     # theta-stream rationale; smaller effect here — the rules are
     # cheaper than shingle hashing — measured ~0.1 s, output identical:
@@ -66,13 +64,7 @@ def q114_streaming_quality_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     agged = gopher_funnel(
         gopher_rule_frame(widen_for_rowlocal(documents_stream(spark, sf_dir)))
     )
-    run_available_now(
-        agged,
-        checkpoint_dir=ckpt,
-        table_name=table,
-        output_mode="complete",
-    )
-    return spark.table(table).orderBy("source")
+    return drain(agged).orderBy("source")
 
 
 def q130_streaming_bm25_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,7 +92,6 @@ def q130_streaming_bm25_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import SPARK_TOKS_EXPR
     from ..operators.retrieval import bm25_query_terms, bm25_scores, bm25_topk
 
-    run = uuid.uuid4().hex[:8]
     # Repartition before the tokenizer: the file-source micro-batch is
     # one task (single parquet file), so the regexp split + explode
     # would otherwise run serially there; the state shuffle that
@@ -116,7 +107,6 @@ def q130_streaming_bm25_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id", F.explode(F.expr(SPARK_TOKS_EXPR)).alias("token")
     )
-    tf_table = f"stream_q130_tf_{run}"
     # UPDATE mode (r17; VERDICT r16 item 4): complete mode re-emits the
     # ENTIRE (doc, token) state table — the suite's largest streaming
     # state, ~260k rows at sf0.1 — into the memory sink every trigger.
@@ -125,22 +115,19 @@ def q130_streaming_bm25_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly max(tf) per key over the update log, reduced below before
     # scoring. Semantics-invariant for ANY micro-batching of the input
     # (measured at sf0.1: 3.4 -> 2.8 s; same oracle hash).
-    run_available_now(
+    tf_log = drain(
         toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")),
-        checkpoint_dir=tempfile.mkdtemp(prefix="dmrs_q130_tf_ckpt_"),
-        table_name=tf_table,
-        output_mode="update",
+        "update",
     )
     from ..sources import load_table
 
     qterms = bm25_query_terms(load_table(spark, sf_dir, "documents"))
     # localCheckpoint gives the drained state fresh lineage: bm25_scores
-    # joins tf against its own df aggregate, and a memory-sink view
+    # joins tf against its own df aggregate, and a memory-sink frame
     # reused on both sides of a join trips analyzer reference conflicts
     # (same pattern as the batch path's tf checkpoint in retrieval.py).
     tf = (
-        spark.table(tf_table)
-        .groupBy("doc_id", "token")
+        tf_log.groupBy("doc_id", "token")
         .agg(F.max("tf").alias("tf"))
         .localCheckpoint(eager=False)
     )
@@ -185,10 +172,9 @@ def q207_streaming_theta_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference lineage: none for sketches (SURVEY §2.3); the
     streaming-vs-batch twin methodology is this module's header."""
-    drained = drain_theta_sketch_stream(
+    return drain_theta_sketch_stream(
         theta_sketch_stream(documents_stream(spark, sf_dir))
     )
-    return drained
 
 
 def theta_sketch_stream(docs: DataFrame) -> DataFrame:
@@ -275,13 +261,7 @@ def drain_theta_sketch_stream(stream: DataFrame) -> DataFrame:
     streaming, batch, and DuckDB-ROUND oracle paths."""
     from pyspark.sql import functions as F
 
-    spark = stream.sparkSession
-    table = f"stream_q207_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q207_stream_ckpt_")
-    run_available_now(
-        stream, checkpoint_dir=ckpt, table_name=table, output_mode="update"
-    )
-    final = spark.table(table).groupBy("source").agg(
+    final = drain(stream, "update").groupBy("source").agg(
         F.max("n_rows").alias("n_rows"),
         F.max_by("n_sketch", "n_rows").alias("n_sketch"),
         F.max_by("overflowed", "n_rows").alias("overflowed"),
@@ -362,16 +342,21 @@ def q214_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt = _q214_ckpt_path(sf_dir, spark)
     # Drain (first call) or catch up (no new files => no-op batch) the
-    # sketch stream into the persistent checkpoint. The sink is noop:
-    # q214 reads the STATE, not the sink — and unlike the memory sink,
-    # noop recovers from an existing checkpoint, so re-invocations are
-    # cheap catch-ups instead of an AnalysisException.
-    run_available_now(
-        theta_sketch_stream(documents_stream(spark, sf_dir)),
-        checkpoint_dir=ckpt,
-        output_mode="update",
-        sink="noop",
+    # sketch stream into the persistent checkpoint (``drain``'s
+    # checkpoint is thrown away). The sink is noop: q214 reads the
+    # STATE, not the sink — and unlike the memory sink, noop recovers
+    # from an existing checkpoint, so re-invocations are cheap catch-ups
+    # instead of an AnalysisException.
+    writer = (
+        theta_sketch_stream(documents_stream(spark, sf_dir))
+        .writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
     )
+    with state_partitions(spark):
+        q = writer.start()
+    q.awaitTermination()
     state = spark.read.format("statestore").load(ckpt)
     summary = state.select(
         F.col("key.source").alias("source"),
@@ -457,12 +442,7 @@ def q212_pydatasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("doc_id").alias("max_doc_id"),
         F.min("n_chars").alias("min_chars"),
     )
-    table = f"stream_q212_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q212_stream_ckpt_")
-    run_available_now(
-        agged, checkpoint_dir=ckpt, table_name=table, output_mode="complete"
-    )
-    return spark.table(table).orderBy("source", "lang")
+    return drain(agged).orderBy("source", "lang")
 
 
 Q212_ORACLE = """
@@ -662,13 +642,10 @@ def q236_watermark_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_docrange(spark)
     doc_path = f"{sf_dir.rstrip('/')}/documents.parquet"
     total = pq.ParquetFile(doc_path).metadata.num_rows
-    run = uuid.uuid4().hex[:8]
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q236_stream_ckpt_")
     src = (
         spark.readStream.schema(STREAM_SCHEMA).format("docrange")
         .option("path", doc_path)
         .option("rowsPerBatch", str(max(1, (total + 2) // 3)))
-        .option("progressDir", ckpt)
         .load()
     )
     deduped = (
@@ -687,29 +664,9 @@ def q236_watermark_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ets", "3600 seconds")
         .dropDuplicatesWithinWatermark(["k"])
     )
-    table = f"stream_q236_{run}"
-    # Bounded state partitions, run_available_now's rationale applied to
-    # a processAllAvailable drain: one state-store instance per shuffle
-    # partition, and for a 100-key state domain the per-instance
-    # checkpoint/commit overhead dominates long before volume does
-    # (measured at sf0.1: 4.5 s -> 3.3 s going 32 -> 8). Sized by the
-    # key domain (>= 12 keys per store), not by the local core count;
-    # the conf is captured at start() and restored immediately (the
-    # q222 single-threaded-builder posture).
-    orig = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(table)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig)
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(table).orderBy("k")
+    # The 100-key state domain leaves >= 12 keys per store at
+    # STATE_PARTITIONS.
+    return drain(deduped, "append", multi_batch=True).orderBy("k")
 
 
 Q236_ORACLE = f"""

@@ -16,6 +16,11 @@ watermark passage.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -417,20 +422,8 @@ def q94_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     increases per update, so max_by is exact). Checked against the batch
     groupBy oracle — the custom-stateful path gets a hash-checked row,
     not just a stream==batch pytest."""
-    import tempfile
-    import uuid
-
-    table = f"stream_q94_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q94_stream_ckpt_")
-    ev = events_stream(spark, sf_dir)
-    run_available_now(
-        user_stats_stateful(ev),
-        checkpoint_dir=ckpt,
-        table_name=table,
-        output_mode="update",
-    )
     return (
-        spark.table(table)
+        drain(user_stats_stateful(events_stream(spark, sf_dir)), "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -457,50 +450,79 @@ ORDER BY user_id
 """
 
 
-def run_available_now(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    table_name: str = "stream_out",
-    output_mode: str = "complete",
-    state_partitions: int | None = 8,
-    sink: str = "memory",
-) -> None:
-    """Drain the stream with Trigger.availableNow into an in-memory
-    table; blocks until the backlog is fully processed.
+# Shuffle partitions of every drain, hence its state-store instance
+# count: one instance per shuffle partition, and for a finite drain the
+# per-instance checkpoint/commit overhead dominates well before data
+# volume does (measured: the stream-stream join fell from 11 s to ~4 s
+# at sf0.1 going 32 -> 8; q236's 100-key state 4.5 -> 3.3 s). A stream's
+# state partitioning is fixed at its first checkpoint, so on a real
+# cluster this is sized ONCE to the steady-state volume — it is not a
+# per-query tunable there.
+STATE_PARTITIONS = 8
 
-    ``sink="noop"`` discards the rows instead — for drains run only to
-    advance a PERSISTENT checkpoint's state (q214): unlike the memory
-    sink, noop supports recovering from an existing checkpoint, so a
-    re-drain over the same location is a cheap no-new-data catch-up
-    rather than an AnalysisException.
 
-    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` for the
-    drain: a streaming query creates one state-store instance per
-    shuffle partition, and for a finite drain the per-instance
-    checkpoint/commit overhead dominates well before data volume does
-    (measured: the stream-stream join fell from 11 s to ~4 s at sf0.1
-    going 32 -> 8). The stream's state partitioning is fixed at first
-    checkpoint anyway, so on a real cluster this knob is sized ONCE to
-    the steady-state volume — it is not a per-query tunable there. The
-    conf is restored after the drain; pass None to inherit the session
-    setting."""
-    spark = stream_df.sparkSession
-    orig = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+@contextmanager
+def state_partitions(spark: SparkSession):
+    """Set ``spark.sql.shuffle.partitions`` to STATE_PARTITIONS around a
+    stream's ``start()`` only. The query clones the session when it
+    starts, so restoring the session value right after ``start()``
+    leaves the running stream at STATE_PARTITIONS while anything else
+    on the session sees the change for no longer than the start call."""
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, str(STATE_PARTITIONS))
     try:
-        writer = stream_df.writeStream.format(sink)
-        if sink == "memory":
-            writer = writer.queryName(table_name)
-        q = (
-            writer.outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig)
+        spark.conf.set(key, orig)
+
+
+def drain(
+    stream_df: DataFrame,
+    output_mode: str = "complete",
+    *,
+    multi_batch: bool = False,
+) -> DataFrame:
+    """Run the stream over its whole backlog into a memory sink and
+    return the sink's rows as a batch DataFrame.
+
+    The drain owns its temp checkpoint, a unique sink name and the
+    state-partition scope, and removes the checkpoint dir and the
+    sink's temp view on success and failure alike: a memory sink cannot
+    recover from a checkpoint, so neither is needed once the query has
+    ended. The returned frame keeps the sink's in-memory plan after the
+    view is dropped; its rows are freed with the frame.
+
+    The trigger is availableNow. ``multi_batch`` uses Spark's default
+    micro-batch trigger with ``processAllAvailable()`` then ``stop()``
+    instead, for Python DataSource streams: they have no availableNow
+    hook and deliver only ONE micro-batch per ``start()`` under it
+    (q236)."""
+    spark = stream_df.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    ckpt = tempfile.mkdtemp(prefix="dmrs_drain_")
+    q = None
+    try:
+        writer = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+        )
+        if not multi_batch:
+            writer = writer.trigger(availableNow=True)
+        with state_partitions(spark):
+            q = writer.start()
+        if multi_batch:
+            q.processAllAvailable()
+        else:
+            q.awaitTermination()
+        return spark.table(name)
+    finally:
+        if q is not None:
+            q.stop()
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def q14_streaming_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,18 +533,7 @@ def q14_streaming_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     output keeps every window (append would hold back windows the final
     watermark hasn't passed), so a full drain equals the batch result
     exactly."""
-    import tempfile
-    import uuid
-
-    table = f"stream_q14_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q14_stream_ckpt_")
-    run_available_now(
-        hourly_windows_stream(spark, sf_dir),
-        checkpoint_dir=ckpt,
-        table_name=table,
-        output_mode="complete",
-    )
-    return spark.table(table).orderBy("w", "event_type")
+    return drain(hourly_windows_stream(spark, sf_dir)).orderBy("w", "event_type")
 
 
 def q39_streaming_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,18 +541,9 @@ def q39_streaming_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     the overlapping-window state path, checked against batch q39's
     oracle. Every event lives in two windows, so this also proves the
     stream replicates rows into member windows identically to batch."""
-    import tempfile
-    import uuid
-
-    table = f"stream_q39_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q39_stream_ckpt_")
-    run_available_now(
-        hourly_windows_stream(spark, sf_dir, window="2 hours", slide="1 hour"),
-        checkpoint_dir=ckpt,
-        table_name=table,
-        output_mode="complete",
-    )
-    return spark.table(table).orderBy("w", "event_type")
+    return drain(
+        hourly_windows_stream(spark, sf_dir, window="2 hours", slide="1 hour")
+    ).orderBy("w", "event_type")
 
 
 def q32_streaming_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,18 +552,9 @@ def q32_streaming_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     would still hold open, so the full drain equals batch q32 exactly
     and the DuckDB oracle can check the session-window STATE path, not
     just the batch expression."""
-    import tempfile
-    import uuid
-
-    table = f"stream_q32_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q32_stream_ckpt_")
-    run_available_now(
-        sessionized_stream(spark, sf_dir),
-        checkpoint_dir=ckpt,
-        table_name=table,
-        output_mode="complete",
+    return drain(sessionized_stream(spark, sf_dir)).orderBy(
+        "user_id", "session_start"
     )
-    return spark.table(table).orderBy("user_id", "session_start")
 
 
 def q80_streaming_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -569,18 +562,9 @@ def q80_streaming_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-sided stateful join surface (buffered rows evicted by watermark)
     checked against a plain SQL interval join: a full drain of the
     backlog must equal the batch join exactly."""
-    import tempfile
-    import uuid
-
-    table = f"stream_q80_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q80_stream_ckpt_")
-    run_available_now(
-        click_purchase_stream_join(spark, sf_dir),
-        checkpoint_dir=ckpt,
-        table_name=table,
-        output_mode="append",
+    return drain(click_purchase_stream_join(spark, sf_dir), "append").orderBy(
+        "purchase_id", "click_id"
     )
-    return spark.table(table).orderBy("purchase_id", "click_id")
 
 
 Q80_ORACLE = """
@@ -599,18 +583,9 @@ def q81_streaming_enrich_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment (broadcast dim join inside a stream)
     drained with availableNow in 'complete' mode, checked against the
     equivalent batch join+aggregate SQL."""
-    import tempfile
-    import uuid
-
-    table = f"stream_q81_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q81_stream_ckpt_")
-    run_available_now(
-        enriched_segment_stream(spark, sf_dir),
-        checkpoint_dir=ckpt,
-        table_name=table,
-        output_mode="complete",
+    return drain(enriched_segment_stream(spark, sf_dir)).orderBy(
+        "segment", "event_type"
     )
-    return spark.table(table).orderBy("segment", "event_type")
 
 
 Q81_ORACLE = """
@@ -637,22 +612,11 @@ def q99_streaming_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day the same plan bounds state by adding a watermark
     (``deduped_stream`` above); the finite drain here omits it so the
     oracle equality is exact rather than horizon-dependent."""
-    import tempfile
-    import uuid
-
     ev = events_stream(spark, sf_dir)
     at_least_once = ev.union(events_stream(spark, sf_dir))
-    table = f"stream_q99_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q99_stream_ckpt_")
-    run_available_now(
-        at_least_once.dropDuplicates(["event_id"]),
-        checkpoint_dir=ckpt,
-        table_name=table,
-        output_mode="append",
-    )
     cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
     return (
-        spark.table(table)
+        drain(at_least_once.dropDuplicates(["event_id"]), "append")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -685,9 +649,6 @@ def q153_streaming_cusum_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the production posture for drift monitoring at 100 TB:
     the state store holds one row per (type, day) — calendar-bounded —
     while the detector itself reruns per drain over thousands of rows."""
-    import tempfile
-    import uuid
-
     from ..operators.events import cusum_tail
 
     ev = events_stream(spark, sf_dir)
@@ -696,15 +657,7 @@ def q153_streaming_cusum_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint")).alias("x")
     )
-    table = f"stream_q153_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dmrs_q153_stream_ckpt_")
-    run_available_now(
-        daily,
-        checkpoint_dir=ckpt,
-        table_name=table,
-        output_mode="complete",
-    )
-    drained = spark.table(table).select(
+    drained = drain(daily).select(
         "event_type",
         # ltz window start -> NTZ wall-clock, matching batch date_trunc
         F.to_timestamp(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss"))
@@ -764,7 +717,7 @@ def _build_queries():
             "q94_stateful_user_stats",
             q94_stateful_user_stats,
             Q94_ORACLE,
-            "transformWithState per-user stats drain (== batch groupBy)",
+            "applyInPandasWithState per-user stats drain (== batch groupBy)",
             ("streaming", "events", "stateful"),
         ),
         QuerySpec(

@@ -18,7 +18,9 @@ a query), so per-query rows show per-query costs.
 
 The warm stream reads a 2-row synthetic parquet written here — never
 the corpus — so no query result or corpus-derived intermediate is
-precomputed; only session machinery is initialized.
+precomputed; only session machinery is initialized. It drains through
+the same ``drain`` as the twins, and the parquet's temp dir is removed
+on exit.
 """
 
 from __future__ import annotations
@@ -32,48 +34,43 @@ from pyspark.sql import functions as F
 
 def warm_streaming_machinery(spark: SparkSession) -> None:
     """Register the docrange source and drain one 2-row synthetic
-    micro-batch through a stateful operator into a noop sink."""
+    micro-batch through a stateful operator."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from ..sources.pystreamsource import STREAM_SCHEMA, register_docrange
+    from .events_stream import drain
 
     register_docrange(spark)
-    d = tempfile.mkdtemp(prefix="dmrs_stream_warm_")
-    path = os.path.join(d, "warm.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([0, 1], pa.int64()),
-                "source": pa.array(["w", "w"], pa.string()),
-                "lang": pa.array(["x", "x"], pa.string()),
-                "n_chars": pa.array([1, 1], pa.int64()),
-            }
-        ),
-        path,
-    )
-    src = (
-        spark.readStream.schema(STREAM_SCHEMA)
-        .format("docrange")
-        .option("path", path)
-        .load()
-    )
-    # The q236 operator shape in miniature: key projection, event time,
-    # watermark, dropDuplicatesWithinWatermark — warms the stateful
-    # codegen + state-store path a real drain uses.
-    warmed = (
-        src.select((F.col("doc_id") % 2).alias("k"))
-        .withColumn(
-            "ets",
-            F.expr("timestamp_micros(CAST((86400 + k) * 1000000 AS BIGINT))"),
+    with tempfile.TemporaryDirectory(prefix="dmrs_stream_warm_") as d:
+        path = os.path.join(d, "warm.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array([0, 1], pa.int64()),
+                    "source": pa.array(["w", "w"], pa.string()),
+                    "lang": pa.array(["x", "x"], pa.string()),
+                    "n_chars": pa.array([1, 1], pa.int64()),
+                }
+            ),
+            path,
         )
-        .withWatermark("ets", "3600 seconds")
-        .dropDuplicatesWithinWatermark(["k"])
-    )
-    q = (
-        warmed.writeStream.format("noop")
-        .option("checkpointLocation", os.path.join(d, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        src = (
+            spark.readStream.schema(STREAM_SCHEMA)
+            .format("docrange")
+            .option("path", path)
+            .load()
+        )
+        # The q236 operator shape in miniature: key projection, event
+        # time, watermark, dropDuplicatesWithinWatermark — warms the
+        # stateful codegen + state-store path a real drain uses.
+        warmed = (
+            src.select((F.col("doc_id") % 2).alias("k"))
+            .withColumn(
+                "ets",
+                F.expr("timestamp_micros(CAST((86400 + k) * 1000000 AS BIGINT))"),
+            )
+            .withWatermark("ets", "3600 seconds")
+            .dropDuplicatesWithinWatermark(["k"])
+        )
+        drain(warmed, "append")

@@ -168,7 +168,7 @@ def test_correlated_table_function_limit_quirk_still_present(spark, sf_dir):
     )
 
 
-def test_streaming_theta_is_microbatch_invariant(spark, sf_dir):
+def test_streaming_theta_is_microbatch_invariant(spark, sf_dir, tmp_path):
     """The flagship q207 claim — the sketch merge is associative and
     idempotent, so the drained result is independent of micro-batching
     — exercised for real: the same documents split into 4 parquet
@@ -176,8 +176,6 @@ def test_streaming_theta_is_microbatch_invariant(spark, sf_dir):
     state merged across batches, overflow re-truncated per batch) must
     produce exactly the single-batch q207 result. The production
     single-file drain never enters the state.exists branch; this does."""
-    import tempfile
-
     from distributed_map_reduce_spark.sources import load_table
     from distributed_map_reduce_spark.streaming.documents_stream import (
         drain_theta_sketch_stream,
@@ -188,7 +186,7 @@ def test_streaming_theta_is_microbatch_invariant(spark, sf_dir):
         map(tuple, q207_streaming_theta_twin(spark, sf_dir).collect())
     )
 
-    tmp = tempfile.mkdtemp(prefix="dmrs_q207_split_")
+    tmp = str(tmp_path / "split")
     docs = load_table(spark, sf_dir, "documents")
     docs.repartition(4).write.mode("overwrite").parquet(tmp)
     split_stream = (

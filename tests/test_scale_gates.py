@@ -133,9 +133,7 @@ def test_q130_update_log_max_equals_final_state(spark, tmp_path):
     (same doc_id appended in a second crawl drop) emits two update
     rows, and max(tf) over the log equals the batch count — for any
     batching, because tf per key is monotone nondecreasing."""
-    from distributed_map_reduce_spark.streaming.events_stream import (
-        run_available_now,
-    )
+    from distributed_map_reduce_spark.streaming.events_stream import drain
 
     src = str(tmp_path / "src")
     docs1 = spark.createDataFrame(
@@ -156,16 +154,13 @@ def test_q130_update_log_max_equals_final_state(spark, tmp_path):
         .load(src)
         .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     )
-    run_available_now(
+    tf_log = drain(
         toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")),
-        str(tmp_path / "ckpt"),
-        "upd_tf_log",
         "update",
     )
     got = {
         (r["doc_id"], r["token"]): r["tf"]
-        for r in spark.table("upd_tf_log")
-        .groupBy("doc_id", "token")
+        for r in tf_log.groupBy("doc_id", "token")
         .agg(F.max("tf").alias("tf"))
         .collect()
     }
@@ -181,7 +176,7 @@ def test_q130_update_log_max_equals_final_state(spark, tmp_path):
     assert got == want
     # the update log genuinely contained a twice-updated key: doc 1's
     # "alpha" count is 2 after drop 1 and 3 after drop 2 — two rows
-    log = spark.table("upd_tf_log").filter(
+    log = tf_log.filter(
         "doc_id = 1 AND token = 'alpha'"
     )
     assert sorted(r["tf"] for r in log.collect()) == [2, 3]

@@ -13,8 +13,8 @@ from distributed_map_reduce_spark.streaming.events_stream import (
     deduped_stream_within_watermark,
     click_purchase_stream_join,
     enriched_segment_stream,
+    drain,
     hourly_windows_stream,
-    run_available_now,
     sessionized_stream,
     user_running_totals,
 )
@@ -24,10 +24,24 @@ def _canon(rows, cols):
     return sorted(tuple(str(r[c]) for c in cols) for r in rows)
 
 
-def test_stream_equals_batch(spark, sf_dir, tmp_path):
-    stream_df = hourly_windows_stream(spark, sf_dir)
-    run_available_now(stream_df, str(tmp_path / "ckpt"), "hourly_stream_out")
-    got = spark.table("hourly_stream_out").collect()
+def _redrain(stream_df, ckpt, name):
+    """Complete-mode memory-sink drain over a checkpoint the CALLER
+    keeps — for the tests that re-drain one checkpoint after new files
+    land, which ``drain`` (one throwaway checkpoint per call) cannot."""
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream_df.sparkSession.table(name)
+
+
+def test_stream_equals_batch(spark, sf_dir):
+    got = drain(hourly_windows_stream(spark, sf_dir)).collect()
 
     batch = all_queries()["q14_hourly_windows"].build(spark, sf_dir).collect()
     cols = ["w", "event_type", "n", "total"]
@@ -35,29 +49,24 @@ def test_stream_equals_batch(spark, sf_dir, tmp_path):
     assert len(got) > 0
 
 
-def test_sliding_stream_equals_batch(spark, sf_dir, tmp_path):
+def test_sliding_stream_equals_batch(spark, sf_dir):
     """Streaming q39 twin: 2h/1h sliding windows drained with
     availableNow must equal the batch query."""
     stream_df = hourly_windows_stream(
         spark, sf_dir, window="2 hours", slide="1 hour"
     )
-    run_available_now(stream_df, str(tmp_path / "ckpt"), "sliding_stream_out")
-    got = spark.table("sliding_stream_out").collect()
+    got = drain(stream_df).collect()
     batch = all_queries()["q39_sliding_windows"].build(spark, sf_dir).collect()
     cols = ["w", "event_type", "n", "total"]
     assert _canon(got, cols) == _canon(batch, cols)
     assert len(got) > 0
 
 
-def test_session_stream_subset_of_batch(spark, sf_dir, tmp_path):
+def test_session_stream_subset_of_batch(spark, sf_dir):
     """Append-mode sessions emit only once watermark-final, so a drained
     stream is exactly the batch q32 result minus sessions still open at
     the final watermark."""
-    stream_df = sessionized_stream(spark, sf_dir)
-    run_available_now(
-        stream_df, str(tmp_path / "ckpt"), "session_stream_out", "append"
-    )
-    got = spark.table("session_stream_out").collect()
+    got = drain(sessionized_stream(spark, sf_dir), "append").collect()
 
     batch = all_queries()["q32_user_sessions"].build(spark, sf_dir).collect()
     cols = ["user_id", "session_start", "session_end", "n_events", "total"]
@@ -67,12 +76,10 @@ def test_session_stream_subset_of_batch(spark, sf_dir, tmp_path):
     assert len(got_c) >= 0.9 * len(batch_c) > 0
 
 
-def test_stream_static_join_equals_batch(spark, sf_dir, tmp_path):
+def test_stream_static_join_equals_batch(spark, sf_dir):
     """Stream-static enrichment (events stream x customer dim) drained
     with availableNow must equal the same join+agg run in batch."""
-    stream_df = enriched_segment_stream(spark, sf_dir)
-    run_available_now(stream_df, str(tmp_path / "ckpt"), "segment_stream_out")
-    got = spark.table("segment_stream_out").collect()
+    got = drain(enriched_segment_stream(spark, sf_dir)).collect()
 
     ev = load_table(spark, sf_dir, "events")
     dim = load_table(spark, sf_dir, "customer").select(
@@ -93,15 +100,11 @@ def test_stream_static_join_equals_batch(spark, sf_dir, tmp_path):
     assert len(got) > 0
 
 
-def test_stream_stream_join_equals_batch(spark, sf_dir, tmp_path):
+def test_stream_stream_join_equals_batch(spark, sf_dir):
     """Stream-stream interval join (purchases x prior-hour clicks per
     user) drained with availableNow must equal the identical batch
     join: inner joins lose nothing once the backlog is processed."""
-    stream_df = click_purchase_stream_join(spark, sf_dir)
-    run_available_now(
-        stream_df, str(tmp_path / "ckpt"), "attribution_stream_out", "append"
-    )
-    got = spark.table("attribution_stream_out").collect()
+    got = drain(click_purchase_stream_join(spark, sf_dir), "append").collect()
 
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -154,10 +157,7 @@ def test_streaming_dedup_drops_replays(spark, sf_dir, tmp_path):
     a.coalesce(1).write.mode("append").parquet(src)  # the replay
     b.coalesce(1).write.mode("append").parquet(src)
 
-    run_available_now(
-        deduped_stream(spark, src), str(tmp_path / "ckpt"), "dedup_out", "append"
-    )
-    out = spark.table("dedup_out")
+    out = drain(deduped_stream(spark, src), "append")
     assert out.count() == out.select("event_id").distinct().count() == ev.count()
 
 
@@ -178,13 +178,7 @@ def test_streaming_dedup_within_watermark_drops_replays(
     a.coalesce(1).write.mode("append").parquet(src)  # the replay
     b.coalesce(1).write.mode("append").parquet(src)
 
-    run_available_now(
-        deduped_stream_within_watermark(spark, src),
-        str(tmp_path / "ckpt"),
-        "dedup_ww_out",
-        "append",
-    )
-    out = spark.table("dedup_ww_out")
+    out = drain(deduped_stream_within_watermark(spark, src), "append")
     assert (
         out.count()
         == out.select("event_id").distinct().count()
@@ -284,17 +278,11 @@ def test_stateful_running_totals_across_batches(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    run_available_now(
-        user_running_totals(stream),
-        str(tmp_path / "ckpt"),
-        "running_totals_out",
-        "update",
-    )
+    log = drain(user_running_totals(stream), "update")
     # multiple updates per user (one per batch that touched it); the one
     # with the highest n_events is the final state
     got = (
-        spark.table("running_totals_out")
-        .groupBy("user_id")
+        log.groupBy("user_id")
         .agg(F.max_by("total", "n_events").alias("total"),
              F.max("n_events").alias("n_events"))
         .collect()
@@ -308,7 +296,7 @@ def test_stateful_running_totals_across_batches(spark, sf_dir, tmp_path):
     want_m = {r["user_id"]: (r["n_events"], round(r["total"], 6)) for r in want}
     assert got_m == want_m
     # state really crossed batches: >1 distinct update row for some user
-    n_updates = spark.table("running_totals_out").count()
+    n_updates = log.count()
     assert n_updates > len(want_m)
 
 
@@ -342,7 +330,7 @@ def test_user_stats_tws_gate(spark, sf_dir):
         assert df.schema == user_stats_stateful(stream).schema
 
 
-def test_rocksdb_state_store_equals_default(spark, sf_dir, tmp_path):
+def test_rocksdb_state_store_equals_default(spark, sf_dir):
     """The same stateful drain on the RocksDB state store provider —
     the production state backend once keyed state outgrows executor
     heap (100 TB/day streams hold millions of keys; HDFS-backed
@@ -357,17 +345,12 @@ def test_rocksdb_state_store_equals_default(spark, sf_dir, tmp_path):
     orig = spark.conf.get(key, None)
     spark.conf.set(key, provider)
     try:
-        run_available_now(
-            hourly_windows_stream(spark, sf_dir),
-            str(tmp_path / "ckpt_rocks"),
-            "hourly_stream_rocks",
-        )
+        got = drain(hourly_windows_stream(spark, sf_dir)).collect()
     finally:
         if orig is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, orig)
-    got = spark.table("hourly_stream_rocks").collect()
     batch = all_queries()["q14_hourly_windows"].build(spark, sf_dir).collect()
     cols = ["w", "event_type", "n", "total"]
     assert _canon(got, cols) == _canon(batch, cols)
@@ -395,10 +378,7 @@ def test_documents_stream_incremental_files(spark, sf_dir, tmp_path):
         stream = (
             spark.readStream.schema(batch.schema).format("parquet").load(src)
         )
-        run_available_now(
-            gopher_funnel(gopher_rule_frame(stream)), ckpt, table, "complete"
-        )
-        return spark.table(table)
+        return _redrain(gopher_funnel(gopher_rule_frame(stream)), ckpt, table)
 
     cols = ["source", "n_docs", "fail_short", "fail_long", "fail_wordlen",
             "fail_stop", "n_pass", "pass_rate"]
@@ -430,9 +410,6 @@ def test_streaming_bm25_incremental_equals_batch(spark, sf_dir, tmp_path):
         bm25_topk,
     )
     from distributed_map_reduce_spark.sources import load_table
-    from distributed_map_reduce_spark.streaming.events_stream import (
-        run_available_now,
-    )
 
     batch = load_table(spark, sf_dir, "documents")
     src = str(tmp_path / "src")
@@ -444,14 +421,13 @@ def test_streaming_bm25_incremental_equals_batch(spark, sf_dir, tmp_path):
             spark.readStream.schema(batch.schema).format("parquet").load(src)
             .select("doc_id", F.explode(F.expr(SPARK_TOKS_EXPR)).alias("token"))
         )
-        run_available_now(
-            toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")),
-            tf_ckpt, f"inc_bm25_tf_{suffix}", "complete",
-        )
         # fresh lineage: a memory-sink view on both sides of the
         # tf-vs-its-own-df join trips analyzer reference conflicts.
         # dl is a derived view of the drained tf state (q130's posture).
-        tf = spark.table(f"inc_bm25_tf_{suffix}").localCheckpoint()
+        tf = _redrain(
+            toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")),
+            tf_ckpt, f"inc_bm25_tf_{suffix}",
+        ).localCheckpoint()
         return tf, tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
 
     def batch_topk(docs):
