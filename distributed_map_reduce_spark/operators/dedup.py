@@ -143,20 +143,84 @@ def _hash7(col: Column) -> Column:
 
 _DUCK_HASH7 = "(('0x' || substr(md5({x}), 1, 7))::BIGINT)"
 
-# --- q24: exact n-gram Jaccard near-dup pairs -------------------------------
+# --- the pair-overlap kernel ----------------------------------------------
+#
+# Each exact-Jaccard detector (q24, q163, q157, q144, q25, q90, q103,
+# q104) is map -> group by key -> reduce: docs that share a key pair up
+# in the key's group, and each pair is scored from one overlap frame
+# (ad, bd, i, na, nb), ad < bd, where i is the pair's overlap mass and
+# na, nb are each doc's own mass (V-SMART-Join's "conjunctive" +
+# "unilateral" split). Two producers build the frame: overlap_pairs
+# (element self-join) and _verified_overlap (per-candidate
+# array_intersect); each detector keeps only its score and threshold.
 
-def _finish_jaccard(inter: DataFrame, sizes: DataFrame) -> DataFrame:
-    """(ad, bd, i) intersection counts + per-doc set sizes -> thresholded
-    rounded-Jaccard pairs."""
+_BAND_KEY = ["band", "x", "y"]
+
+
+def _shared_key_pairs(
+    rows: DataFrame, on: list[str], weight: str | None = None
+) -> DataFrame:
+    """(doc_id, *on[, weight]) rows -> one (ad, bd[, weight]) row per
+    key value that docs ad < bd share; ``weight`` rides side a only."""
+    extra = [weight] if weight else []
     return (
-        inter.join(sizes.withColumnsRenamed({"doc_id": "ad", "n": "na"}), "ad")
-        .join(sizes.withColumnsRenamed({"doc_id": "bd", "n": "nb"}), "bd")
-        .withColumn("j", F.col("i") / (F.col("na") + F.col("nb") - F.col("i")))
+        rows.select(F.col("doc_id").alias("ad"), *on, *extra)
+        .join(rows.select(F.col("doc_id").alias("bd"), *on), on)
+        .filter(F.col("ad") < F.col("bd"))
+    )
+
+
+def _mass(weight: str | None = None) -> Column:
+    return F.sum(weight) if weight else F.count(F.lit(1))
+
+
+def _doc_masses(elems: DataFrame, weight: str | None = None) -> DataFrame:
+    """(doc_id, k[, w]) -> (doc_id, n): each doc's own mass."""
+    return elems.groupBy("doc_id").agg(_mass(weight).alias("n"))
+
+
+def _with_masses(inter: DataFrame, masses: DataFrame) -> DataFrame:
+    """(ad, bd, i) + (doc_id, n) -> the overlap frame (ad, bd, i, na, nb)."""
+    return (
+        inter.join(masses.withColumnsRenamed({"doc_id": "ad", "n": "na"}), "ad")
+        .join(masses.withColumnsRenamed({"doc_id": "bd", "n": "nb"}), "bd")
+        .select("ad", "bd", "i", "na", "nb")
+    )
+
+
+def overlap_pairs(elems: DataFrame, weight: str | None = None) -> DataFrame:
+    """(doc_id, k[, w]) element rows, distinct per doc -> overlap frame.
+
+    i is the count of shared keys, or with ``weight`` the sum of their
+    weights; na, nb are the same aggregate over each doc's own rows.
+    Each shared key contributes one (ad, bd) join row, so the
+    aggregate IS the intersection mass — no separate candidate
+    materialization + re-join (that doubled the shuffle volume)."""
+    # w must be a function of k alone: only side a's weight is summed.
+    inter = (
+        _shared_key_pairs(elems, ["k"], weight)
+        .groupBy("ad", "bd")
+        .agg(_mass(weight).alias("i"))
+    )
+    return _with_masses(inter, _doc_masses(elems, weight))
+
+
+def jaccard() -> Column:
+    """|A ∩ B| / |A ∪ B| over an overlap frame's (i, na, nb)."""
+    return F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
+
+
+def _jaccard_pairs(overlap: DataFrame) -> DataFrame:
+    """Overlap frame -> (ad, bd, jacc): J >= JACCARD_T, rounded at 2 dp."""
+    return (
+        overlap.withColumn("j", jaccard())
         .filter(F.col("j") >= JACCARD_T)
         .select("ad", "bd", F.round("j", 2).alias("jacc"))
         .orderBy("ad", "bd")
     )
 
+
+# --- q24: exact n-gram Jaccard near-dup pairs -------------------------------
 
 def q24_ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-semantics declared query: no df-cap, hash-checked."""
@@ -202,19 +266,7 @@ def jaccard_neardup_pairs(
         df_per_key = sh.groupBy("k").agg(F.count(F.lit(1)).alias("df"))
         keep = df_per_key.filter(F.col("df") <= max_doc_freq).select("k")
         sh = sh.join(keep, "k")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    # Intersection counts fall straight out of the shingle self-join:
-    # each shared shingle contributes one (ad, bd) row (sets are
-    # distinct), so groupBy-count IS |A ∩ B| — no separate candidate
-    # materialization + re-join (that doubled the shuffle volume).
-    inter = (
-        sh.select(F.col("doc_id").alias("ad"), "k")
-        .join(sh.select(F.col("doc_id").alias("bd"), "k"), "k")
-        .filter(F.col("ad") < F.col("bd"))
-        .groupBy("ad", "bd")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    return _finish_jaccard(inter, sizes)
+    return _jaccard_pairs(overlap_pairs(sh))
 
 
 # ORDER-BY-free body, exported so composers (training.py q72) can embed
@@ -263,15 +315,19 @@ PAIR_STORE_TABLE = "pair_store.neardup_pairs"
 PAIR_STORE_BUCKETS = 16
 
 
-def default_pair_store_table(sf_dir: str) -> str:
-    """Per-corpus default store name: the table is keyed by the sf_dir
-    basename so a store built at one scale factor can never serve a
-    query running at another (the driver checks sf0.01 while bench runs
-    sf0.1 in the same warehouse)."""
+def _corpus_tag(sf_dir: str) -> str:
+    """Table-name suffix for a corpus: the sf_dir basename, so a store
+    built at one scale factor can never serve a query running at
+    another (the driver checks sf0.01 while bench runs sf0.1 in the
+    same warehouse)."""
     import re
 
-    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    return f"pair_store.neardup_pairs_{tag}"
+    return re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+
+
+def default_pair_store_table(sf_dir: str) -> str:
+    """Per-corpus default store name (see :func:`_corpus_tag`)."""
+    return f"pair_store.neardup_pairs_{_corpus_tag(sf_dir)}"
 
 
 def _corpus_fingerprint(sf_dir: str) -> str:
@@ -388,9 +444,8 @@ def _minhash_sigs(sh: DataFrame) -> DataFrame:
     )
 
 
-def _minhash_bands(sh: DataFrame) -> DataFrame:
-    """Raw shingle stream -> one (doc_id, band, x, y) row per LSH band."""
-    sigs = _minhash_sigs(sh)
+def _minhash_bands(sigs: DataFrame) -> DataFrame:
+    """MinHash signatures -> one (doc_id, band, x, y) row per LSH band."""
     return sigs.select(
         "doc_id",
         F.explode(
@@ -408,6 +463,12 @@ def _minhash_bands(sh: DataFrame) -> DataFrame:
     ).select("doc_id", "b.band", "b.x", "b.y")
 
 
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """(ad, bd) for every LSH band bucket two docs share, one row per
+    shared band (callers dedupe)."""
+    return _shared_key_pairs(bands, _BAND_KEY).select("ad", "bd")
+
+
 def _hashed_shingle_sets(sh: DataFrame) -> DataFrame:
     """Raw shingle stream -> (doc_id, shs) hashed shingle sets — 8 B per
     shingle, not raw strings; collect_set dedupes, so no distinct
@@ -419,12 +480,28 @@ def _hashed_shingle_sets(sh: DataFrame) -> DataFrame:
     )
 
 
+def _verified_overlap(cands: DataFrame, sets: DataFrame) -> DataFrame:
+    """Candidate (ad, bd) pairs + (doc_id, shs) hashed shingle sets ->
+    overlap frame. One array_intersect per pair (codegen) instead of
+    re-joining the exploded shingle table: candidate count bounds the
+    work, and the set frame is small enough to hash-join (AQE
+    broadcasts when it fits)."""
+    return (
+        cands.join(
+            sets.select(F.col("doc_id").alias("ad"), F.col("shs").alias("sa")), "ad"
+        )
+        .join(
+            sets.select(F.col("doc_id").alias("bd"), F.col("shs").alias("sb")), "bd"
+        )
+        .withColumn("i", F.size(F.array_intersect("sa", "sb")))
+        .withColumn("na", F.size("sa"))
+        .withColumn("nb", F.size("sb"))
+    )
+
+
 def _verify_band_candidates(cands: DataFrame, sets: DataFrame) -> DataFrame:
     """Candidate (ad, bd) pairs + hashed shingle sets -> exact-Jaccard
-    verified, thresholded, rounded pairs. One array_intersect per pair
-    (codegen) instead of re-joining the exploded shingle table:
-    candidate count bounds the work, and the set frame is small enough
-    to hash-join (AQE broadcasts when it fits)."""
+    verified, thresholded, rounded pairs."""
     # Repartition the candidate stream: AQE sizes post-shuffle
     # partitions by shuffle BYTES, and candidate pairs compress to a
     # few MB while each row costs an array_intersect — without this the
@@ -438,41 +515,12 @@ def _verify_band_candidates(cands: DataFrame, sets: DataFrame) -> DataFrame:
     # defaultParallelism(= total cores) is the right width for this
     # compute-bound stage.
     nparts = cands.sparkSession.sparkContext.defaultParallelism
-    pairs = (
-        cands.repartition(nparts)
-        .join(
-            sets.select(F.col("doc_id").alias("ad"), F.col("shs").alias("sa")), "ad"
-        )
-        .join(
-            sets.select(F.col("doc_id").alias("bd"), F.col("shs").alias("sb")), "bd"
-        )
-        .withColumn("i", F.size(F.array_intersect("sa", "sb")))
-        .withColumn("na", F.size("sa"))
-        .withColumn("nb", F.size("sb"))
-    )
-    return (
-        pairs.withColumn(
-            "j", F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-        )
-        .filter(F.col("j") >= JACCARD_T)
-        .select("ad", "bd", F.round("j", 2).alias("jacc"))
-        .orderBy("ad", "bd")
-    )
+    return _jaccard_pairs(_verified_overlap(cands.repartition(nparts), sets))
 
 
 def q25_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(spark, sf_dir, distinct=False)
-    bands = _minhash_bands(sh)
-    cands = (
-        bands.select(F.col("doc_id").alias("ad"), "band", "x", "y")
-        .join(
-            bands.select(F.col("doc_id").alias("bd"), "band", "x", "y"),
-            ["band", "x", "y"],
-        )
-        .filter(F.col("ad") < F.col("bd"))
-        .select("ad", "bd")
-        .distinct()
-    )
+    cands = _band_pairs(_minhash_bands(_minhash_sigs(sh))).distinct()
     return _verify_band_candidates(cands, _hashed_shingle_sets(sh))
 
 
@@ -993,112 +1041,110 @@ ORDER BY doc_id
 """
 
 
-# --- q90: incremental dedup against a stored fingerprint store ---------------
+# --- q90 / q144: incremental dedup against a stored corpus -----------------
 
 # The delta split is part of the declared semantics (and the oracle):
 # docs with doc_id % INC_MOD == INC_REM are "new this crawl".
 INC_MOD = 10
 INC_REM = 7
+CRAWL_STORE_BUCKETS = 8
 
 
-def minhash_store_tables(
-    spark: SparkSession, sf_dir: str, base: DataFrame, n_buckets: int = 8
-) -> tuple[str, str]:
-    """Write the MinHash fingerprint store for ``base`` docs: band rows
-    bucketed by the LSH bucket key and hashed shingle sets bucketed by
-    doc_id. The write shuffles ONCE; every later probe join reads the
+def _crawl_split(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(stored, new) documents: the corpus minus this crawl's docs, and
+    this crawl's docs."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    is_delta = F.col("doc_id") % INC_MOD == INC_REM
+    return docs.filter(~is_delta), docs.filter(is_delta)
+
+
+def _write_crawl_stores(
+    spark: SparkSession, sf_dir: str, stores: list[tuple[str, DataFrame, list[str]]]
+) -> tuple[str, ...]:
+    """Write each (name, frame, bucket_cols) as the per-corpus bucketed
+    table ``crawl_store.<name>_<corpus>`` and return the table names.
+    Overwrite + orphan clearing (sinks.materialize_bucketed_store): a
+    rebuild replaces the previous store, a failed one leaves nothing
+    the next build does not overwrite."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ..sinks import materialize_bucketed_store
+
+    # The writes are independent jobs over the same checkpointed frame —
+    # submit them together so the second back-fills the first's task
+    # tail instead of waiting for it (guide §2.6 overlap independent
+    # jobs). Each write owns its table.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [
+            pool.submit(
+                materialize_bucketed_store,
+                spark,
+                df,
+                f"crawl_store.{name}_{_corpus_tag(sf_dir)}",
+                buckets=CRAWL_STORE_BUCKETS,
+                bucket_cols=tuple(cols),
+            )
+            for name, df, cols in stores
+        ]
+        return tuple(f.result() for f in futs)
+
+
+def _delta_pairs(new: DataFrame, stored: DataFrame, on: list[str]) -> DataFrame:
+    """(ad, bd), ad < bd, one row per key value in ``on`` that a new doc
+    shares with a stored doc or with another new doc: exactly the rows
+    of the full-corpus self-join that touch a new doc. The stored side
+    arrives bucketed on ``on``, so only the new side exchanges."""
+    cross = (
+        new.select(F.col("doc_id").alias("nd"), *on)
+        .join(stored.select(F.col("doc_id").alias("sd"), *on), on)
+        .select(F.least("nd", "sd").alias("ad"), F.greatest("nd", "sd").alias("bd"))
+    )
+    return cross.unionByName(_shared_key_pairs(new, on).select("ad", "bd"))
+
+
+def minhash_store_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Write the MinHash fingerprint store of the stored corpus: band
+    rows bucketed by the LSH bucket key and hashed shingle sets bucketed
+    by doc_id. The write shuffles ONCE; every later probe join reads the
     stored side with NO Exchange (pinned in tests/test_bucketing.py) —
     the append-only-crawl amortization story at 100 TB, where
     recomputing (or reshuffling) the corpus fingerprints per crawl is
     the thing you cannot afford. Returns (bands_table, sets_table)."""
-    import uuid
-    from concurrent.futures import ThreadPoolExecutor
-
     # sh feeds BOTH table writes — EAGER checkpoint so the tokenizer +
-    # shingle explode runs once up front (the q166/q182 rule; the q144
-    # sibling shingle_store_tables does the same), and the two writes
-    # below start from materialized blocks.
-    sh = _doc_shingles(spark, sf_dir, distinct=False, docs=base).localCheckpoint()
-    sfx = uuid.uuid4().hex[:8]
-    bands_tbl, sets_tbl = f"mh_store_bands_{sfx}", f"mh_store_sets_{sfx}"
-    # The two writes are independent jobs over the same checkpointed
-    # frame — submit both so the second back-fills the first's task
-    # tail instead of waiting for it (guide §2.6 overlap independent
-    # jobs; actions were only sequential because this code called them
-    # sequentially). Different table names, no shared mutable state.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fb = pool.submit(
-            lambda: _minhash_bands(sh)
-            .write.bucketBy(n_buckets, "band", "x", "y")
-            .saveAsTable(bands_tbl)
-        )
-        fs = pool.submit(
-            lambda: _hashed_shingle_sets(sh)
-            .write.bucketBy(n_buckets, "doc_id")
-            .saveAsTable(sets_tbl)
-        )
-        fb.result()
-        fs.result()
-    return bands_tbl, sets_tbl
-
-
-def incremental_minhash_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    bands_tbl: str,
-    sets_tbl: str,
-    delta: DataFrame,
-) -> DataFrame:
-    """Dedup NEW docs against an existing fingerprint store without
-    recomputing the corpus: candidates = (new x stored) band-bucket
-    collisions + (new x new) self-collisions; verification reads stored
-    shingle sets. Returns exactly the full-corpus q25 pairs that involve
-    at least one delta doc — recompute equivalence is the oracle.
-
-    Scale shape: per crawl, cost is O(delta fingerprints + collisions).
-    The stored side arrives pre-bucketed on the probe key, so the big
-    table is never shuffled; only the (small) delta side exchanges."""
-    sh_new = _doc_shingles(spark, sf_dir, distinct=False, docs=delta)
-    new_bands = _minhash_bands(sh_new)
-    stored_bands = spark.table(bands_tbl)
-    cross = (
-        new_bands.select(F.col("doc_id").alias("nd"), "band", "x", "y")
-        .join(
-            stored_bands.select(F.col("doc_id").alias("sd"), "band", "x", "y"),
-            ["band", "x", "y"],
-        )
-        .select(
-            F.least("nd", "sd").alias("ad"), F.greatest("nd", "sd").alias("bd")
-        )
+    # shingle explode runs once up front (the q166/q182 rule), and the
+    # two writes start from materialized blocks.
+    sh = _doc_shingles(
+        spark, sf_dir, distinct=False, docs=_crawl_split(spark, sf_dir)[0]
+    ).localCheckpoint()
+    return _write_crawl_stores(
+        spark,
+        sf_dir,
+        [
+            ("mh_bands", _minhash_bands(_minhash_sigs(sh)), _BAND_KEY),
+            ("mh_sets", _hashed_shingle_sets(sh), ["doc_id"]),
+        ],
     )
-    within = (
-        new_bands.select(F.col("doc_id").alias("ad"), "band", "x", "y")
-        .join(
-            new_bands.select(F.col("doc_id").alias("bd"), "band", "x", "y"),
-            ["band", "x", "y"],
-        )
-        .filter(F.col("ad") < F.col("bd"))
-        .select("ad", "bd")
-    )
-    cands = cross.unionByName(within).distinct()
-    all_sets = spark.table(sets_tbl).unionByName(_hashed_shingle_sets(sh_new))
-    return _verify_band_candidates(cands, all_sets)
 
 
 def q90_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-only-crawl dedup: the corpus minus this crawl's docs
     (doc_id % 10 == 7) is fingerprinted into a bucketed store, then only
-    the new docs are probed against it. Hash-checked against the
-    full-corpus q25 recompute restricted to pairs touching a new doc —
-    the incremental path must find EXACTLY what the batch path finds."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    is_delta = F.col("doc_id") % INC_MOD == INC_REM
-    bands_tbl, sets_tbl = minhash_store_tables(
-        spark, sf_dir, docs.filter(~is_delta)
+    the new docs are probed against it: candidates = (new x stored)
+    band-bucket collisions + (new x new) self-collisions; verification
+    reads stored shingle sets. Hash-checked against the full-corpus q25
+    recompute restricted to pairs touching a new doc — the incremental
+    path must find EXACTLY what the batch path finds.
+
+    Scale shape: per crawl, cost is O(delta fingerprints + collisions);
+    the big stored table is never shuffled."""
+    bands_tbl, sets_tbl = minhash_store_tables(spark, sf_dir)
+    sh_new = _doc_shingles(
+        spark, sf_dir, distinct=False, docs=_crawl_split(spark, sf_dir)[1]
     )
-    return incremental_minhash_pairs(
-        spark, sf_dir, bands_tbl, sets_tbl, docs.filter(is_delta)
-    )
+    new_bands = _minhash_bands(_minhash_sigs(sh_new))
+    cands = _delta_pairs(new_bands, spark.table(bands_tbl), _BAND_KEY).distinct()
+    all_sets = spark.table(sets_tbl).unionByName(_hashed_shingle_sets(sh_new))
+    return _verify_band_candidates(cands, all_sets)
 
 
 Q90_ORACLE = (
@@ -1108,103 +1154,47 @@ Q90_ORACLE = (
 )
 
 
-# --- q144: incremental EXACT dedup against a stored shingle store ------------
-
-def shingle_store_tables(
-    spark: SparkSession, sf_dir: str, base: DataFrame, n_buckets: int = 8
-) -> tuple[str, str]:
+def shingle_store_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """The exact detector's analog of :func:`minhash_store_tables`:
     hashed shingle keys bucketed by ``k`` (the probe key — a new crawl
     joins on it with the stored side shuffle-free) plus per-doc set
     sizes bucketed by doc_id (the Jaccard denominator, one row per
-    doc). Write shuffles once; every later crawl probe reads buckets.
-    Returns (shingles_table, sizes_table)."""
-    import uuid
-    from concurrent.futures import ThreadPoolExecutor
-
-    # EAGER checkpoint + overlapped writes: minhash_store_tables'
-    # rationale (guide §2.6) — both tables derive from the one
-    # materialized shingle-key frame and are independent jobs.
-    sh = _doc_shingle_keys(spark, sf_dir, docs=base).localCheckpoint()
-    sfx = uuid.uuid4().hex[:8]
-    sh_tbl, sz_tbl = f"shingle_store_{sfx}", f"shingle_sizes_{sfx}"
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fk = pool.submit(
-            lambda: sh.write.bucketBy(n_buckets, "k").saveAsTable(sh_tbl)
-        )
-        fz = pool.submit(
-            lambda: sh.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.bucketBy(n_buckets, "doc_id")
-            .saveAsTable(sz_tbl)
-        )
-        fk.result()
-        fz.result()
-    return sh_tbl, sz_tbl
-
-
-def incremental_exact_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    sh_tbl: str,
-    sz_tbl: str,
-    delta: DataFrame,
-) -> DataFrame:
-    """q24's exact-Jaccard pairs RESTRICTED to pairs touching a delta
-    doc, computed against the stored shingle corpus instead of a
-    recompute: intersection rows = (new shingles x stored shingles) on
-    the bucketed key + the (new x new) self-join; sizes = stored sizes
-    ∪ delta sizes. Recompute equivalence is the oracle (q90's contract
-    applied to the exact detector).
-
-    Scale shape: per crawl, O(delta shingles + shared-key collisions);
-    the corpus-sized store arrives pre-bucketed on `k` so it never
-    re-shuffles — only the delta side and the (candidate-pair-sized)
-    intersection aggregate exchange."""
-    sh_new = _doc_shingle_keys(spark, sf_dir, docs=delta).localCheckpoint(
-        eager=False
+    doc). Returns (shingles_table, sizes_table)."""
+    # EAGER checkpoint: minhash_store_tables' rationale.
+    sh = _doc_shingle_keys(
+        spark, sf_dir, docs=_crawl_split(spark, sf_dir)[0]
+    ).localCheckpoint()
+    return _write_crawl_stores(
+        spark,
+        sf_dir,
+        [("shingle_keys", sh, ["k"]), ("shingle_sizes", _doc_masses(sh), ["doc_id"])],
     )
-    stored = spark.table(sh_tbl)
-    cross = (
-        sh_new.select(F.col("doc_id").alias("nd"), "k")
-        .join(stored.select(F.col("doc_id").alias("sd"), "k"), "k")
-        .select(
-            F.least("nd", "sd").alias("ad"),
-            F.greatest("nd", "sd").alias("bd"),
-        )
-    )
-    within = (
-        sh_new.select(F.col("doc_id").alias("ad"), "k")
-        .join(sh_new.select(F.col("doc_id").alias("bd"), "k"), "k")
-        .filter(F.col("ad") < F.col("bd"))
-        .select("ad", "bd")
-    )
-    inter = (
-        cross.unionByName(within)
-        .groupBy("ad", "bd")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sizes = spark.table(sz_tbl).unionByName(
-        sh_new.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    )
-    return _finish_jaccard(inter, sizes)
 
 
 def q144_incremental_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-only crawl for the EXACT detector: the corpus minus this
-    crawl's docs (doc_id % 10 == 7, q90's declared delta) is shingled
-    into a bucketed store, then only the new docs are probed against
-    it. Hash-checked against the full-corpus q24 recompute restricted
-    to pairs touching a new doc — incremental must find EXACTLY what
-    batch finds. Together with q90 this closes the incremental story
-    for both rungs of the dedup ladder (approximate LSH and exact
-    Jaccard)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    is_delta = F.col("doc_id") % INC_MOD == INC_REM
-    sh_tbl, sz_tbl = shingle_store_tables(spark, sf_dir, docs.filter(~is_delta))
-    return incremental_exact_pairs(
-        spark, sf_dir, sh_tbl, sz_tbl, docs.filter(is_delta)
+    crawl's docs (q90's declared delta) is shingled into a bucketed
+    store, then only the new docs are probed against it: overlap rows =
+    (new x stored) shingles on the bucketed key + the (new x new)
+    self-join; sizes = stored sizes ∪ delta sizes. Hash-checked against
+    the full-corpus q24 recompute restricted to pairs touching a new
+    doc. Together with q90 this closes the incremental story for both
+    rungs of the dedup ladder (approximate LSH and exact Jaccard).
+
+    Scale shape: per crawl, O(delta shingles + shared-key collisions);
+    only the delta side and the (candidate-pair-sized) intersection
+    aggregate exchange."""
+    sh_tbl, sz_tbl = shingle_store_tables(spark, sf_dir)
+    sh_new = _doc_shingle_keys(
+        spark, sf_dir, docs=_crawl_split(spark, sf_dir)[1]
+    ).localCheckpoint(eager=False)
+    inter = (
+        _delta_pairs(sh_new, spark.table(sh_tbl), ["k"])
+        .groupBy("ad", "bd")
+        .agg(_mass().alias("i"))
     )
+    masses = spark.table(sz_tbl).unionByName(_doc_masses(sh_new))
+    return _jaccard_pairs(_with_masses(inter, masses))
 
 
 Q144_ORACLE = (
@@ -1222,36 +1212,10 @@ def q103_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     trusts the approximate pipeline at 100 TB (est_j's banding recall
     and its error against truth ARE the dedup quality bar).
 
-    Reuses q25's machinery end to end: one signature aggregate, band
-    self-join for candidates, per-pair array_intersect verification.
     No threshold — calibration wants the misses too."""
     sh = _doc_shingles(spark, sf_dir, distinct=False)
     sigs = _minhash_sigs(sh).localCheckpoint(eager=False)
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.col(f"s{2 * j}").alias("x"),
-                        F.col(f"s{2 * j + 1}").alias("y"),
-                    )
-                    for j in range(N_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band", "b.x", "b.y")
-    cands = (
-        bands.select(F.col("doc_id").alias("ad"), "band", "x", "y")
-        .join(
-            bands.select(F.col("doc_id").alias("bd"), "band", "x", "y"),
-            ["band", "x", "y"],
-        )
-        .filter(F.col("ad") < F.col("bd"))
-        .select("ad", "bd")
-        .distinct()
-    )
+    cands = _band_pairs(_minhash_bands(sigs)).distinct()
     sa = sigs.select(
         F.col("doc_id").alias("ad"), *[F.col(f"s{i}").alias(f"a{i}") for i in range(N_PERM)]
     )
@@ -1261,25 +1225,8 @@ def q103_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree = sum(
         (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(N_PERM)
     )
-    sets = _hashed_shingle_sets(sh)
-    exact = (
-        cands.join(
-            sets.select(F.col("doc_id").alias("ad"), F.col("shs").alias("xa")),
-            "ad",
-        )
-        .join(
-            sets.select(F.col("doc_id").alias("bd"), F.col("shs").alias("xb")),
-            "bd",
-        )
-        .withColumn("i", F.size(F.array_intersect("xa", "xb")))
-        .select(
-            "ad",
-            "bd",
-            (
-                F.col("i")
-                / (F.size("xa") + F.size("xb") - F.col("i"))
-            ).alias("exact_raw"),
-        )
+    exact = _verified_overlap(cands, _hashed_shingle_sets(sh)).select(
+        "ad", "bd", jaccard().alias("exact_raw")
     )
     return (
         exact.join(sa, "ad")
@@ -1418,12 +1365,9 @@ def q157_idf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     division — no logs), so intersection/union masses are exact integer
     sums; the similarity is one double division, rounded at 4dp.
 
-    Scale shape: identical join graph to q24 (shingle-bucket self-join
-    + two size joins), with one extra tiny (key -> df) aggregate that
-    the stop-shingle cap also needs; weights ride the existing rows, so
-    shuffle volume grows by 8 bytes/row. Same skew story as q24
-    (boilerplate buckets) — and the same `max_doc_freq` mitigation
-    applies unchanged upstream."""
+    Scale shape: the weights ride the kernel's rows (+8 bytes/row of
+    shuffle), plus one tiny (key -> df) aggregate; q24's `max_doc_freq`
+    mitigation applies upstream."""
     sh = _doc_shingle_keys(spark, sf_dir).localCheckpoint(eager=False)
     n_docs = (
         load_table(spark, sf_dir, "documents")
@@ -1443,25 +1387,10 @@ def q157_idf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)  # feeds both join sides + doc masses
     )
-    mass = weighted.groupBy("doc_id").agg(F.sum("w").alias("m"))
-    inter = (
-        weighted.select(F.col("doc_id").alias("ad"), "k", "w")
-        .join(weighted.select(F.col("doc_id").alias("bd"), "k"), "k")
-        .filter(F.col("ad") < F.col("bd"))
-        .groupBy("ad", "bd")
-        .agg(F.sum("w").alias("iw"))
-    )
-    sim = (
-        inter.join(mass.withColumnsRenamed({"doc_id": "ad", "m": "ma"}), "ad")
-        .join(mass.withColumnsRenamed({"doc_id": "bd", "m": "mb"}), "bd")
-        .withColumn(
-            "wjac",
-            F.col("iw").cast("double")
-            / (F.col("ma") + F.col("mb") - F.col("iw")).cast("double"),
-        )
-    )
     return (
-        sim.filter(F.col("wjac") >= WJACCARD_T)
+        overlap_pairs(weighted, weight="w")
+        .withColumn("wjac", jaccard())
+        .filter(F.col("wjac") >= WJACCARD_T)
         .select("ad", "bd", F.round("wjac", 4).alias("wjac"))
         .orderBy("ad", "bd")
     )
@@ -1507,34 +1436,13 @@ def q163_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is how boilerplate-wrapped crawl dups usually present. Ships
     both scores so the gap (high cont, low jacc) is visible per pair.
 
-    Scale shape: byte-identical join graph to q24 (the shingle-bucket
-    self-join already produces |A ∩ B|); only the final threshold
-    predicate differs. Same skew caveats, same `max_doc_freq`
-    mitigation upstream."""
+    Same skew caveats and `max_doc_freq` mitigation as q24."""
     sh = _doc_shingle_keys(spark, sf_dir).localCheckpoint(eager=False)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        sh.select(F.col("doc_id").alias("ad"), "k")
-        .join(sh.select(F.col("doc_id").alias("bd"), "k"), "k")
-        .filter(F.col("ad") < F.col("bd"))
-        .groupBy("ad", "bd")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    scored = (
-        inter.join(sizes.withColumnsRenamed({"doc_id": "ad", "n": "na"}), "ad")
-        .join(sizes.withColumnsRenamed({"doc_id": "bd", "n": "nb"}), "bd")
-        .withColumn(
-            "cont",
-            F.col("i").cast("double") / F.least("na", "nb").cast("double"),
-        )
-        .withColumn(
-            "jacc",
-            F.col("i").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("i")).cast("double"),
-        )
-    )
     return (
-        scored.filter(F.col("cont") >= CONTAIN_T)
+        overlap_pairs(sh)
+        .withColumn("cont", F.col("i") / F.least("na", "nb"))
+        .withColumn("jacc", jaccard())
+        .filter(F.col("cont") >= CONTAIN_T)
         .select(
             "ad",
             "bd",

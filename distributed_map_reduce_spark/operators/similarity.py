@@ -173,7 +173,8 @@ def _ivf_fit_centers(emb: DataFrame) -> list[list[float]]:
     Deterministic: seeded sample, first-K init, fixed rounds."""
     import numpy as np
 
-    vecs = emb.select(F.col("embedding").cast("array<double>").alias("v"))
+    v = F.col("embedding").cast("array<double>").alias("v")
+    vecs = emb.select(v)
     sample = np.array(
         [
             r["v"]
@@ -190,10 +191,14 @@ def _ivf_fit_centers(emb: DataFrame) -> list[list[float]]:
     # declaring the input empty; fail loudly only on a truly empty
     # frame; cycle the rows deterministically up to K otherwise
     # (duplicate centers are harmless for argmin assignment — first
-    # position wins ties).
+    # position wins ties). The retry orders by vec_id: a bare LIMIT
+    # picks whichever rows the partition layout yields first.
     if len(sample) == 0:
         sample = np.array(
-            [r["v"] for r in vecs.limit(IVF_FIT_CAP).collect()]
+            [
+                r["v"]
+                for r in emb.orderBy("vec_id").select(v).limit(IVF_FIT_CAP).collect()
+            ]
         )
     if len(sample) == 0:
         raise ValueError(

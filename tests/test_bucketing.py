@@ -63,27 +63,24 @@ def test_minhash_store_probe_join_never_shuffles_stored_side(spark, sf_dir):
     reads it with ZERO Exchange — only the (small) delta side shuffles.
     At 100 TB the store is the corpus; reshuffling it per crawl is the
     cost this layout exists to delete."""
-    import pyspark.sql.functions as F
-
     from distributed_map_reduce_spark.operators.dedup import (
-        INC_MOD,
-        INC_REM,
+        _crawl_split,
         _doc_shingles,
         _minhash_bands,
+        _minhash_sigs,
         minhash_store_tables,
     )
 
     orig = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        is_delta = F.col("doc_id") % INC_MOD == INC_REM
-        bands_tbl, _ = minhash_store_tables(spark, sf_dir, docs.filter(~is_delta))
+        _, delta = _crawl_split(spark, sf_dir)
+        bands_tbl, _ = minhash_store_tables(spark, sf_dir)
         # checkpoint the delta bands so the probe plan is exactly
         # [checkpoint scan -> Exchange -> join <- bucketed store scan]:
         # any second Exchange would be a shuffle of the stored side.
         new_bands = _minhash_bands(
-            _doc_shingles(spark, sf_dir, distinct=False, docs=docs.filter(is_delta))
+            _minhash_sigs(_doc_shingles(spark, sf_dir, distinct=False, docs=delta))
         ).localCheckpoint()
         probe = new_bands.withColumnsRenamed({"doc_id": "nd"}).join(
             spark.table(bands_tbl), ["band", "x", "y"]
@@ -155,11 +152,8 @@ def test_shingle_store_probe_join_never_shuffles_stored_side(spark, sf_dir):
     """q144's exact-detector analog of the MinHash-store pin: the
     shingle store is bucketed on the key `k`, so a new-crawl probe join
     reads it with ZERO Exchange — only the (small) delta side shuffles."""
-    import pyspark.sql.functions as F
-
     from distributed_map_reduce_spark.operators.dedup import (
-        INC_MOD,
-        INC_REM,
+        _crawl_split,
         _doc_shingle_keys,
         shingle_store_tables,
     )
@@ -167,12 +161,9 @@ def test_shingle_store_probe_join_never_shuffles_stored_side(spark, sf_dir):
     orig = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        is_delta = F.col("doc_id") % INC_MOD == INC_REM
-        sh_tbl, _ = shingle_store_tables(spark, sf_dir, docs.filter(~is_delta))
-        new_sh = _doc_shingle_keys(
-            spark, sf_dir, docs=docs.filter(is_delta)
-        ).localCheckpoint()
+        _, delta = _crawl_split(spark, sf_dir)
+        sh_tbl, _ = shingle_store_tables(spark, sf_dir)
+        new_sh = _doc_shingle_keys(spark, sf_dir, docs=delta).localCheckpoint()
         probe = new_sh.withColumnsRenamed({"doc_id": "nd"}).join(
             spark.table(sh_tbl), "k"
         )
@@ -182,3 +173,31 @@ def test_shingle_store_probe_join_never_shuffles_stored_side(spark, sf_dir):
         assert tree.count("Exchange") == 1, tree
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", orig)
+
+
+def test_crawl_store_rebuilds_add_no_tables_or_dirs(spark, sf_dir):
+    """q90 and q144 write their stores under per-corpus names with
+    overwrite, so after the first build of each, rebuilding adds no
+    catalog table in any database and no warehouse directory."""
+    import os
+
+    from distributed_map_reduce_spark.operators.dedup import (
+        q90_incremental_dedup,
+        q144_incremental_exact_dedup,
+    )
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def footprint():
+        tables = sum(
+            len(spark.catalog.listTables(db.name))
+            for db in spark.catalog.listDatabases()
+        )
+        return tables, sum(len(dirs) for _, dirs, _ in os.walk(wh))
+
+    for build in (q90_incremental_dedup, q144_incremental_exact_dedup):
+        build(spark, sf_dir)
+    first = footprint()
+    for build in (q90_incremental_dedup, q144_incremental_exact_dedup):
+        build(spark, sf_dir)
+    assert footprint() == first

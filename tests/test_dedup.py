@@ -203,3 +203,30 @@ def test_incremental_dedup_equals_batch_recompute(spark, sf_dir):
     )
     got = sorted(tuple(r) for r in q90_incremental_dedup(spark, sf_dir).collect())
     assert got == want and len(got) > 0
+
+
+def test_overlap_pairs_matches_brute_force_sets(spark):
+    """The pair-overlap kernel on a hand-built 4-doc corpus, with and
+    without weights, equals brute-force Python set arithmetic: one
+    (ad, bd, i, na, nb) row per unordered sharing pair, ad < bd — no
+    self pair, no mirrored pair, no row for doc 4, which shares
+    nothing."""
+    from distributed_map_reduce_spark.operators.dedup import overlap_pairs
+
+    sets = {1: {10, 11, 12}, 2: {11, 12, 13}, 3: {12, 14}, 4: {99}}
+    w = {10: 5, 11: 3, 12: 2, 13: 7, 14: 1, 99: 4}  # a function of k
+    elems = spark.createDataFrame(
+        [(d, k, w[k]) for d, ks in sets.items() for k in ks],
+        "doc_id long, k long, w long",
+    )
+    for weight, mass in ((None, len), ("w", lambda ks: sum(w[k] for k in ks))):
+        want = {
+            (a, b): (mass(sets[a] & sets[b]), mass(sets[a]), mass(sets[b]))
+            for a in sets
+            for b in sets
+            if a < b and sets[a] & sets[b]
+        }
+        rows = overlap_pairs(elems, weight).collect()
+        got = {(r["ad"], r["bd"]): (r["i"], r["na"], r["nb"]) for r in rows}
+        assert len(rows) == len(got) and got == want, (weight, rows)
+        assert 4 not in {d for pair in got for d in pair}

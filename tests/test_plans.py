@@ -243,3 +243,26 @@ def test_q112_subqueries_decorrelate_to_semi_anti_joins(spark, sf_dir):
     assert "LeftSemi" in plan, plan
     assert "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan
+
+
+# Static exchange counts of the exact-Jaccard dedup family at the gate
+# scale, as measured with tools/plan_audit.py before the family moved
+# onto one pair-overlap kernel; the kernel must not add an exchange.
+_DEDUP_KERNEL_SHUFFLES = {
+    "q24_ngram_jaccard_dedup": 14,
+    "q163_containment_dedup": 14,
+    "q157_idf_weighted_jaccard": 14,
+    "q144_incremental_exact_dedup": 16,
+    "q25_minhash_lsh_dedup": 26,
+    "q90_incremental_dedup": 34,
+    "q103_minhash_calibration": 22,
+    "q104_jaccard_prefix_join": 26,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DEDUP_KERNEL_SHUFFLES))
+def test_dedup_kernel_exchange_counts(spark, name):
+    from distributed_map_reduce_spark.plans.inspect import count_shuffles
+
+    df = _q(name, spark, "/root/testdata/sf0.01")
+    assert count_shuffles(df) == _DEDUP_KERNEL_SHUFFLES[name]

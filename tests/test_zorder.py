@@ -54,16 +54,25 @@ def _files_overlapping(path: str, col: str, lo: float, hi: float):
 
 
 def test_zorder_prunes_both_dimensions(spark, tmp_path):
-    df = _grid(spark)
-    zpath = str(tmp_path / "zorder")
-    spath = str(tmp_path / "xsorted")
-    write_zordered(df, zpath, ("x", "y"), num_files=FILES)
-    (
-        df.repartitionByRange(FILES, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
+    # Range partitioning samples its file boundaries with a seed taken
+    # from the RDD id, i.e. from how many RDDs the session made before
+    # this test; sampling every row gives the same layout in any session.
+    sample_key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    orig = spark.conf.get(sample_key)
+    spark.conf.set(sample_key, str(N))
+    try:
+        df = _grid(spark)
+        zpath = str(tmp_path / "zorder")
+        spath = str(tmp_path / "xsorted")
+        write_zordered(df, zpath, ("x", "y"), num_files=FILES)
+        (
+            df.repartitionByRange(FILES, "x")
+            .sortWithinPartitions("x")
+            .write.mode("overwrite")
+            .parquet(spath)
+        )
+    finally:
+        spark.conf.set(sample_key, orig)
     band = (0.0, K / 8 - 1)  # 1/8 of the domain
     for col in ("x", "y"):
         zhit, ztot = _files_overlapping(zpath, col, *band)
