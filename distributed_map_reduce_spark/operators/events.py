@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import QuerySpec
+from ..session import app_scratch_dir
 from ..sources import load_table
 
 
@@ -130,25 +131,6 @@ ORDER BY event_type
 """
 
 
-def _q206_store_path(sf_dir: str, spark: SparkSession) -> str:
-    """Stable per-(sf-dir, Spark app) location for q206's variant
-    parquet: the query overwrites it on every build, so repeated
-    invocations within one session (parity, bench, scaling, driver)
-    reuse ONE on-disk copy instead of leaking a fresh mkdtemp
-    full-table copy per call. The applicationId component (ADVICE r10)
-    keeps concurrent processes over the same sf_dir — bench alongside
-    pytest, pytest-xdist — from overwriting each other's store
-    mid-read, and makes the /tmp name unpredictable to other users."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"dmrs_q206_variant_{tag}")
-
-
 def q206_variant_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VARIANT storage round trip — the write half q203 left open: the
     parsed Variant column is WRITTEN to parquet (Spark persists it as
@@ -170,7 +152,9 @@ def q206_variant_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lineage: none — the reference's sinks are plain text
     (worker.go:303-334); typed semi-structured STORAGE is an
     engine-surface gap item, same rationale as q203."""
-    tmp = _q206_store_path(sf_dir, spark)
+    # Overwritten on every build, so repeated invocations reuse one
+    # on-disk copy instead of leaking a full-table copy per call.
+    tmp = app_scratch_dir(spark, sf_dir, "q206_variant")
     ev = load_table(spark, sf_dir, "events")
     (
         ev.select("event_id", "event_type", F.parse_json("props").alias("v"))

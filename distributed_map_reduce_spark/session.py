@@ -18,11 +18,20 @@ deployment and merely *also* work on local[32]):
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# applicationId -> the scratch dirs handed out to that application.
+_APP_SCRATCH: dict[str, set[str]] = {}
+_APP_SCRATCH_LOCK = threading.Lock()
 
 
 def get_spark(
@@ -77,3 +86,32 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def app_scratch_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """Stable per-(sf dir, Spark application) scratch path
+    ``<tmp>/dmrs_<kind>_<tag>`` for a query that writes and re-reads its
+    own files (q206's variant store, q214's and q219's persistent
+    checkpoints, q217's XML files). Repeated invocations in one
+    application reuse the same path; the applicationId in the tag keeps
+    concurrent processes over the same sf dir apart and makes the name
+    unpredictable to other users. The application's dirs are removed
+    when the interpreter exits (one ``atexit`` hook per application)."""
+    app = spark.sparkContext.applicationId
+    tag = hashlib.md5(f"{sf_dir}|{app}".encode()).hexdigest()[:8]
+    path = os.path.join(tempfile.gettempdir(), f"dmrs_{kind}_{tag}")
+    with _APP_SCRATCH_LOCK:
+        if app not in _APP_SCRATCH:
+            _APP_SCRATCH[app] = set()
+            atexit.register(remove_app_scratch_dirs, app)
+        _APP_SCRATCH[app].add(path)
+    return path
+
+
+def remove_app_scratch_dirs(app_id: str) -> None:
+    """Remove every scratch dir ``app_scratch_dir`` handed out to the
+    application (the exit hook)."""
+    with _APP_SCRATCH_LOCK:
+        paths = _APP_SCRATCH.pop(app_id, ())
+    for path in paths:
+        shutil.rmtree(path, ignore_errors=True)

@@ -143,24 +143,22 @@ def expected_schema(name: str) -> T.StructType:
 # results, not even a materialized plan; every action on it still
 # computes from the parquet input, so this is the same reuse a user
 # gets by assigning `df = spark.read.parquet(p)` once per program
-# (VERDICT r16 item 5: plan-level reuse, not data caching). Keyed
-# WEAKLY by the exact session object — a DataFrame binds to the session
+# (VERDICT r16 item 5: plan-level reuse, not data caching). The cache
+# hangs on the exact session object — a DataFrame binds to the session
 # that read it, so a derived `newSession()` (stats.py's v2-conf scope)
-# or a fresh application can never be served another session's frame;
-# stopped sessions fall out of the map. The corpus directories are
-# immutable snapshots (TESTDATA.md), and tests that write their own
-# tables use fresh temp dirs per test.
-from weakref import WeakKeyDictionary
-
-_TABLE_CACHE: "WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    WeakKeyDictionary()
-)
+# or a fresh application can never be served another session's frame.
+# The cached frames reference their session, so cache and session form
+# a cycle that the garbage collector frees once nothing else holds the
+# session (a map keyed weakly by session would never evict: its values
+# would keep their keys alive). The corpus directories are immutable
+# snapshots (TESTDATA.md), and tests that write their own tables use
+# fresh temp dirs per test.
 
 
-def clear_table_cache() -> None:
-    """Drop all memoized table DataFrames (e.g. after replacing a
-    corpus directory in place within one application)."""
-    _TABLE_CACHE.clear()
+def session_cache(spark: SparkSession) -> dict:
+    """This session's memo dict (loaded tables, stream schemas), stored
+    on the session object and freed with it."""
+    return spark.__dict__.setdefault("_dmrs_cache", {})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -183,14 +181,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    per_session = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir.rstrip("/"), name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    df = _load_table_uncached(spark, sf_dir, name)
-    per_session[key] = df
-    return df
+    cache = session_cache(spark)
+    key = ("table", sf_dir.rstrip("/"), name)
+    if key not in cache:
+        cache[key] = _load_table_uncached(spark, sf_dir, name)
+    return cache[key]
 
 
 def _load_table_uncached(

@@ -38,21 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import app_scratch_dir
 from .tables import load_table
-
-
-def _q217_store_path(sf_dir: str, spark: SparkSession) -> str:
-    """Stable per-(sf-dir, Spark app) location for the XML files — the
-    q206 discipline: overwritten per build, reused across invocations
-    in one session, and collision-free across concurrent processes."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"dmrs_q217_xml_{tag}")
 
 
 def q217_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,7 +56,8 @@ def q217_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partition count, ordering) never reaches the result.
     """
     docs = load_table(spark, sf_dir, "documents")
-    path = _q217_store_path(sf_dir, spark)
+    # overwritten per build, reused across invocations in one session
+    path = app_scratch_dir(spark, sf_dir, "q217_xml")
     projected = docs.select(
         "doc_id",
         "source",

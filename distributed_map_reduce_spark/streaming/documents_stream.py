@@ -19,22 +19,22 @@ sink instead of the in-memory test sink.
 
 from __future__ import annotations
 
-import tempfile
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events_stream import drain, state_partitions
+from ..session import app_scratch_dir
+from .events_stream import drain, state_partitions, stream_schema
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents table. Schema comes from
-    one batch footer read (streams cannot infer), matching the
+    one memoised batch footer read (streams cannot infer), matching the
     footer-adaptive posture of sources/tables.py."""
     root = sf_dir.rstrip("/")
-    schema = spark.read.parquet(f"{root}/documents.parquet").schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(stream_schema(spark, root, "documents"))
         .format("parquet")
         .option("pathGlobFilter", "documents.parquet")
         .load(root)
@@ -289,22 +289,6 @@ def _kmv_estimate():
     )
 
 
-def _q214_ckpt_path(sf_dir: str, spark: SparkSession) -> str:
-    """Stable per-(sf-dir, Spark app) checkpoint for q214's sketch
-    stream — the q206 store-path pattern: repeated invocations within
-    one session resume the SAME checkpoint (a no-new-data catch-up,
-    not a re-drain), because the whole point of the query is reading
-    PERSISTENT state; the applicationId component keeps concurrent
-    processes from sharing a state store mid-read."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"dmrs_q214_ckpt_{tag}")
-
-
 def q214_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OFFLINE STATE INSPECTION — ``spark.read.format("statestore")``
     over a streaming checkpoint: the state store q207's
@@ -340,21 +324,25 @@ def q214_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's upgrade (SURVEY §2.3)."""
     from pyspark.sql import functions as F
 
-    ckpt = _q214_ckpt_path(sf_dir, spark)
+    # One checkpoint per (sf dir, application): repeated invocations
+    # resume the SAME checkpoint (a no-new-data catch-up, not a
+    # re-drain), because the whole point of the query is reading
+    # PERSISTENT state.
+    ckpt = app_scratch_dir(spark, sf_dir, "q214_ckpt")
     # Drain (first call) or catch up (no new files => no-op batch) the
     # sketch stream into the persistent checkpoint (``drain``'s
     # checkpoint is thrown away). The sink is noop: q214 reads the
     # STATE, not the sink — and unlike the memory sink, noop recovers
     # from an existing checkpoint, so re-invocations are cheap catch-ups
     # instead of an AnalysisException.
+    stream = theta_sketch_stream(documents_stream(spark, sf_dir))
     writer = (
-        theta_sketch_stream(documents_stream(spark, sf_dir))
-        .writeStream.format("noop")
+        stream.writeStream.format("noop")
         .outputMode("update")
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
     )
-    with state_partitions(spark):
+    with state_partitions(stream):
         q = writer.start()
     q.awaitTermination()
     state = spark.read.format("statestore").load(ckpt)
@@ -458,18 +446,12 @@ ORDER BY source, lang
 
 
 def _q219_run_dirs(sf_dir: str, spark: SparkSession) -> tuple[str, str]:
-    """Stable per-(sf-dir, app) checkpoint + output locations — the
-    q206/q214 discipline: first invocation in a session drains the
-    corpus, later invocations recover the checkpoint and catch up with
-    zero new batches (foreachBatch supports checkpoint recovery, unlike
-    the memory sink), re-reading the same committed files."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"dmrs_q219_{tag}")
+    """Stable per-(sf-dir, app) checkpoint + output locations: the
+    first invocation in a session drains the corpus, later invocations
+    recover the checkpoint and catch up with zero new batches
+    (foreachBatch supports checkpoint recovery, unlike the memory
+    sink), re-reading the same committed files."""
+    base = app_scratch_dir(spark, sf_dir, "q219")
     return os.path.join(base, "ckpt"), os.path.join(base, "out")
 
 
@@ -509,7 +491,6 @@ def q219_foreachbatch_exactly_once(
     executor count, and a real warehouse swaps the directory for a
     transactional table with the batchId as the idempotence key."""
     import glob
-    import os
 
     from ..sources.pystreamsource import STREAM_SCHEMA, register_docrange
 
@@ -664,8 +645,7 @@ def q236_watermark_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ets", "3600 seconds")
         .dropDuplicatesWithinWatermark(["k"])
     )
-    # The 100-key state domain leaves >= 12 keys per store at
-    # STATE_PARTITIONS.
+    # JVM state: the 100-key state domain drains into one store.
     return drain(deduped, "append", multi_batch=True).orderBy("k")
 
 

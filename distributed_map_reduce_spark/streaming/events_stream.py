@@ -26,16 +26,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # readStream needs an explicit schema (no inference on streams). The
-# physical type of ts has varied across testdata generations
+# physical type of events.ts has varied across testdata generations
 # (TIMESTAMP(NANOS) -> long under nanosAsLong; TIMESTAMP(MICROS) ->
-# timestamp_ntz), so the stream schema is derived from the batch footer
-# read — exactly the posture of sources/tables.py, one footer read of
-# driver-side setup cost.
+# timestamp_ntz), so a stream's schema is derived from the batch footer
+# read — exactly the posture of sources/tables.py. That read runs a
+# Spark job, so it is memoised per (session, sf dir, table) in the
+# session's cache: every later stream over the table in the session
+# reuses one footer read.
 
 
-def _events_stream_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    batch = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    return batch.schema
+def stream_schema(spark: SparkSession, sf_dir: str, table: str) -> T.StructType:
+    from ..sources.tables import session_cache
+
+    root = sf_dir.rstrip("/")
+    cache = session_cache(spark)
+    key = ("stream_schema", root, table)
+    if key not in cache:
+        cache[key] = spark.read.parquet(f"{root}/{table}.parquet").schema
+    return cache[key]
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,7 +52,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # The file-stream source requires a directory; target the sf dir and
     # glob-filter down to the events table file.
-    phys = _events_stream_schema(spark, sf_dir)
+    phys = stream_schema(spark, sf_dir, "events")
     raw = (
         spark.readStream.schema(phys)
         .format("parquet")
@@ -450,27 +458,58 @@ ORDER BY user_id
 """
 
 
-# Shuffle partitions of every drain, hence its state-store instance
-# count: one instance per shuffle partition, and for a finite drain the
-# per-instance checkpoint/commit overhead dominates well before data
-# volume does (measured: the stream-stream join fell from 11 s to ~4 s
-# at sf0.1 going 32 -> 8; q236's 100-key state 4.5 -> 3.3 s). A stream's
-# state partitioning is fixed at its first checkpoint, so on a real
-# cluster this is sized ONCE to the steady-state volume — it is not a
-# per-query tunable there.
+# Ceiling on a drain's shuffle partitions, hence on its state-store
+# instance count: one instance per shuffle partition, and for a finite
+# drain the per-instance checkpoint/commit overhead dominates well
+# before data volume does (measured: the stream-stream join fell from
+# 11 s to ~4 s at sf0.1 going 32 -> 8). Below the ceiling the width
+# depends on where the state function runs (``state_width``). A
+# stream's state partitioning is fixed at its first checkpoint, so on a
+# real cluster it is sized ONCE to the steady-state volume — it is not
+# a per-query tunable there.
 STATE_PARTITIONS = 8
 
 
+def state_width(python_state: bool, parallelism: int) -> int:
+    """State partitions for a drain: ``min(STATE_PARTITIONS,
+    parallelism)`` when a state function runs in Python, else 1.
+
+    A JVM state operator's per-key work is cheap next to a store commit,
+    so a finite drain runs fastest in one store (measured at sf0.1 on
+    local[4], widths 8/4/2/1: q80 4.43/3.24/2.75/2.72 s). A Python state
+    function is CPU-bound per key and needs the cores (q94
+    3.39/2.56/3.05/4.27 s)."""
+    return min(STATE_PARTITIONS, parallelism) if python_state else 1
+
+
+def _has_python_state(stream_df: DataFrame) -> bool:
+    """Whether the stream's plan runs an ``applyInPandasWithState``
+    function (``FlatMapGroupsInPandasWithState``)."""
+    stack = [stream_df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "FlatMapGroupsInPandasWithState":
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
 @contextmanager
-def state_partitions(spark: SparkSession):
-    """Set ``spark.sql.shuffle.partitions`` to STATE_PARTITIONS around a
-    stream's ``start()`` only. The query clones the session when it
-    starts, so restoring the session value right after ``start()``
-    leaves the running stream at STATE_PARTITIONS while anything else
-    on the session sees the change for no longer than the start call."""
+def state_partitions(stream_df: DataFrame):
+    """Set ``spark.sql.shuffle.partitions`` to the stream's
+    ``state_width`` around its ``start()`` only. The query clones the
+    session when it starts, so restoring the session value right after
+    ``start()`` leaves the running stream at that width while anything
+    else on the session sees the change for no longer than the start
+    call."""
+    spark = stream_df.sparkSession
+    width = state_width(
+        _has_python_state(stream_df), spark.sparkContext.defaultParallelism
+    )
     key = "spark.sql.shuffle.partitions"
     orig = spark.conf.get(key)
-    spark.conf.set(key, str(STATE_PARTITIONS))
+    spark.conf.set(key, str(width))
     try:
         yield
     finally:
@@ -487,11 +526,12 @@ def drain(
     return the sink's rows as a batch DataFrame.
 
     The drain owns its temp checkpoint, a unique sink name and the
-    state-partition scope, and removes the checkpoint dir and the
-    sink's temp view on success and failure alike: a memory sink cannot
-    recover from a checkpoint, so neither is needed once the query has
-    ended. The returned frame keeps the sink's in-memory plan after the
-    view is dropped; its rows are freed with the frame.
+    state-partition scope (``state_partitions``), and removes the
+    checkpoint dir and the sink's temp view on success and failure
+    alike: a memory sink cannot recover from a checkpoint, so neither
+    is needed once the query has ended. The returned frame keeps the
+    sink's in-memory plan after the view is dropped; its rows are freed
+    with the frame.
 
     The trigger is availableNow. ``multi_batch`` uses Spark's default
     micro-batch trigger with ``processAllAvailable()`` then ``stop()``
@@ -511,7 +551,7 @@ def drain(
         )
         if not multi_batch:
             writer = writer.trigger(availableNow=True)
-        with state_partitions(spark):
+        with state_partitions(stream_df):
             q = writer.start()
         if multi_batch:
             q.processAllAvailable()
@@ -597,14 +637,24 @@ ORDER BY segment, event_type
 """
 
 
+def at_least_once_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The event stream unioned with itself: ONE file-stream source whose
+    every micro-batch is read twice, so each record is delivered exactly
+    twice — at-least-once delivery with the duplicates planted."""
+    ev = events_stream(spark, sf_dir)
+    return ev.union(ev)
+
+
 def q99_streaming_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-dedup under at-least-once delivery, hash-checked:
-    the event stream unioned with itself simulates every record being
-    delivered twice (the upstream reality dropDuplicates exists for);
-    keyed dedup state keeps the first occurrence of each event_id, and
-    the drained survivors are aggregated per event_type and compared to
-    a batch oracle over the ORIGINAL table — if any replay leaked or
-    any id was dropped, counts and cent-exact sums cannot match.
+    ``at_least_once_events`` delivers every record twice (the upstream
+    reality dropDuplicates exists for); keyed dedup state keeps the
+    first occurrence of each event_id, and the drained survivors are
+    aggregated per event_type and compared to a batch oracle over the
+    ORIGINAL table — if any replay leaked or any id was dropped, counts
+    and cent-exact sums cannot match. That the replays really arrive is
+    pinned separately: a drain without the dedup yields exactly twice
+    the table's rows.
 
     The dedup runs in the stream (append mode — each first occurrence
     emits exactly once); the report aggregate runs on the drained memory
@@ -612,8 +662,7 @@ def q99_streaming_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day the same plan bounds state by adding a watermark
     (``deduped_stream`` above); the finite drain here omits it so the
     oracle equality is exact rather than horizon-dependent."""
-    ev = events_stream(spark, sf_dir)
-    at_least_once = ev.union(events_stream(spark, sf_dir))
+    at_least_once = at_least_once_events(spark, sf_dir)
     cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
     return (
         drain(at_least_once.dropDuplicates(["event_id"]), "append")

@@ -52,13 +52,11 @@ def test_variant_roundtrip_preserves_type_and_values(spark, sf_dir):
     from pyspark.sql import functions as F
     from pyspark.sql.types import VariantType
 
-    from distributed_map_reduce_spark.operators.events import (
-        _q206_store_path,
-    )
+    from distributed_map_reduce_spark.session import app_scratch_dir
     from distributed_map_reduce_spark.sources import load_table
 
     a = sorted(map(tuple, q206_variant_roundtrip(spark, sf_dir).collect()))
-    back = spark.read.parquet(_q206_store_path(sf_dir, spark))
+    back = spark.read.parquet(app_scratch_dir(spark, sf_dir, "q206_variant"))
     assert isinstance(back.schema["v"].dataType, VariantType), back.schema
 
     ev = load_table(spark, sf_dir, "events")

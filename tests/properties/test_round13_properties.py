@@ -71,13 +71,13 @@ def test_q217_roundtrip_preserves_every_row(spark, sf_dir):
     pin the row level: the XML-written frame read back equals the
     projected source frame exactly (including the specials-laced probe
     string)."""
+    from distributed_map_reduce_spark.session import app_scratch_dir
     from distributed_map_reduce_spark.sources.xmlsource import (
-        _q217_store_path,
         q217_xml_roundtrip,
     )
 
     q217_xml_roundtrip(spark, sf_dir)  # writes + reads the store
-    path = _q217_store_path(sf_dir, spark)
+    path = app_scratch_dir(spark, sf_dir, "q217_xml")
     back = (
         spark.read.format("xml")
         .option("rowTag", "doc")

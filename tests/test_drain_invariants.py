@@ -1,7 +1,9 @@
 """Drain invariants: a drained streaming twin leaves nothing behind — no
 temp dir, no catalog view, no active stream, no changed session conf —
-while its stateful operators still ran at 8 state partitions; and a
-drain whose stream fails cleans up the same way."""
+while its stateful operators ran at the width ``state_width`` gives
+them; a drain whose stream fails cleans up the same way;
+and the per-application scratch dirs of the persistent-checkpoint
+queries are removed by their exit hook."""
 
 import os
 import tempfile
@@ -13,11 +15,12 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 from distributed_map_reduce_spark.registry import all_queries
 
-TWINS = (
-    "q14_streaming_twin",
-    "q99_streaming_dedup_twin",
-    "q236_watermark_dedup_twin",
-)
+# Each twin's state width: JVM state operators drain into one store.
+TWINS = {
+    "q14_streaming_twin": 1,
+    "q99_streaming_dedup_twin": 1,
+    "q236_watermark_dedup_twin": 1,
+}
 
 
 class _StateOperatorWidths(StreamingQueryListener):
@@ -73,16 +76,19 @@ def test_twins_leave_no_dirs_views_streams_or_conf(spark, sf_dir):
     before = _footprint(spark)
     _flush_listener_events(spark)
     spark.streams.addListener(listener)
+    widths = {}
     try:
         for name in TWINS:
+            seen = set(listener.widths)
             assert specs[name].build(spark, sf_dir).collect()
-        _flush_listener_events(spark)
+            _flush_listener_events(spark)
+            # one run per twin, each with stateful operators
+            (run,) = set(listener.widths) - seen
+            widths[name] = listener.widths[run]
     finally:
         spark.streams.removeListener(listener)
     _assert_unchanged(spark, before)
-    # one run per twin, each with stateful operators, all at 8
-    assert len(listener.widths) == len(TWINS)
-    assert all(w == {8} for w in listener.widths.values())
+    assert widths == {name: {w} for name, w in TWINS.items()}
 
 
 def test_failed_drain_cleans_up(spark, sf_dir):
@@ -98,3 +104,79 @@ def test_failed_drain_cleans_up(spark, sf_dir):
     with pytest.raises(StreamingQueryException, match="drain-probe-failure"):
         drain(failing, "append")
     _assert_unchanged(spark, before)
+
+
+def test_state_width_branches():
+    from distributed_map_reduce_spark.streaming.events_stream import (
+        STATE_PARTITIONS,
+        state_width,
+    )
+
+    # JVM state: one store, whatever the parallelism
+    assert state_width(False, 4) == 1
+    assert state_width(False, 32) == 1
+    # a Python state function gets the parallelism, capped at 8
+    assert state_width(True, 4) == 4
+    assert state_width(True, 1) == 1
+    assert state_width(True, 32) == STATE_PARTITIONS
+
+
+def test_python_state_found_in_plan(spark, sf_dir):
+    from distributed_map_reduce_spark.streaming.events_stream import (
+        _has_python_state,
+        at_least_once_events,
+        enriched_segment_stream,
+        events_stream,
+        user_stats_stateful,
+    )
+
+    assert not _has_python_state(events_stream(spark, sf_dir))
+    assert not _has_python_state(at_least_once_events(spark, sf_dir))
+    assert not _has_python_state(enriched_segment_stream(spark, sf_dir))
+    assert _has_python_state(user_stats_stateful(events_stream(spark, sf_dir)))
+
+
+def test_q99_stream_delivers_every_event_twice(spark, sf_dir):
+    """q99's dedup check is only meaningful if the replays arrive: the
+    at-least-once stream drained WITHOUT dropDuplicates holds exactly
+    two copies of the events table."""
+    from distributed_map_reduce_spark.sources import load_table
+    from distributed_map_reduce_spark.streaming.events_stream import (
+        at_least_once_events,
+        drain,
+    )
+
+    n_events = load_table(spark, sf_dir, "events").count()
+    assert n_events > 0
+    drained = drain(at_least_once_events(spark, sf_dir), "append")
+    assert drained.count() == 2 * n_events
+    assert drained.select("event_id").distinct().count() == n_events
+
+
+def test_app_scratch_dirs_removed_by_exit_hook(monkeypatch):
+    """One exit hook per application removes every scratch dir handed
+    out to it. A stand-in session keeps the real application's dirs
+    (q206/q214/q217/q219) out of the test."""
+    from types import SimpleNamespace
+
+    from distributed_map_reduce_spark import session
+
+    hooks = []
+    monkeypatch.setattr(
+        session.atexit, "register", lambda f, *a: hooks.append((f, a))
+    )
+    fake = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app-scratch-probe")
+    )
+    a = session.app_scratch_dir(fake, "/corpus", "probe_a")
+    b = session.app_scratch_dir(fake, "/corpus", "probe_b")
+    # stable per (sf dir, application), one hook for the application
+    assert session.app_scratch_dir(fake, "/corpus", "probe_a") == a
+    assert a != b
+    assert os.path.basename(a).startswith("dmrs_probe_a_")
+    assert hooks == [(session.remove_app_scratch_dirs, ("app-scratch-probe",))]
+    for d in (a, b):
+        os.makedirs(os.path.join(d, "sub"))
+    fn, args = hooks[0]
+    fn(*args)
+    assert not os.path.exists(a) and not os.path.exists(b)

@@ -203,3 +203,28 @@ def test_load_table_memoizes_per_session_and_dir(spark, sf_dir):
     assert a.count() == _load_table_uncached(
         spark, sf_dir, "documents"
     ).count()
+
+
+def test_load_table_cache_is_freed_with_its_session(spark, sf_dir):
+    """The per-session table cache must not keep its session alive: a
+    derived session that loaded a table is collected once unreferenced."""
+    import gc
+    import weakref
+
+    from pyspark import RDD
+
+    from distributed_map_reduce_spark.sources import load_table
+
+    # Every SparkSession() rebinds RDD.toDF to a closure over itself;
+    # put the fixture session's binding back so only the cache can hold
+    # the derived session.
+    to_df = RDD.toDF
+    try:
+        other = spark.newSession()
+    finally:
+        RDD.toDF = to_df
+    load_table(other, sf_dir, "region")
+    ref = weakref.ref(other)
+    del other
+    gc.collect()
+    assert ref() is None
