@@ -500,9 +500,6 @@ def q226_micro_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     second window pass. At 100 TB the same expression runs under
     readStream + watermark with state evicted per watermark.
     """
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "q226_events"
-    )
     return spark.sql(
         f"""
 SELECT user_id,
@@ -513,10 +510,11 @@ SELECT user_id,
        COUNT(*) AS n_events,
        CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
          AS total_cents
-FROM q226_events
+FROM {{events}}
 GROUP BY user_id, session_window(ts, '{MICRO_SESSION_GAP}')
 ORDER BY user_id, session_start_us
-"""
+""",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -1772,8 +1770,6 @@ def q222_time_of_day_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.timeType.enabled")
     spark.conf.set("spark.sql.timeType.enabled", "true")
     try:
-        ev = load_table(spark, sf_dir, "events")
-        ev.createOrReplaceTempView("q222_events")
         return spark.sql(
             """
 SELECT CAST(time_trunc('HOUR',
@@ -1782,10 +1778,11 @@ SELECT CAST(time_trunc('HOUR',
        COUNT(*) AS n,
        CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
          AS total_cents
-FROM q222_events
+FROM {events}
 GROUP BY tod, event_type
 ORDER BY tod, event_type
-"""
+""",
+            events=load_table(spark, sf_dir, "events"),
         )
     finally:
         spark.conf.set("spark.sql.timeType.enabled", prev)
@@ -1827,9 +1824,6 @@ def q232_try_timestamp_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions; ONE hash aggregate keyed on event_type (4 groups) with
     COUNT/MIN/MAX partial state map-side — shuffle carries a few rows
     per task at any corpus size."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "__q232_events"
-    )
     return spark.sql(
         """
 WITH feed AS (
@@ -1837,7 +1831,7 @@ WITH feed AS (
          CASE WHEN event_id % 13 = 0
               THEN concat('??', date_format(ts, 'yyyy-MM-dd HH:mm:ss'))
               ELSE date_format(ts, 'yyyy-MM-dd HH:mm:ss') END AS ts_raw
-  FROM __q232_events
+  FROM {events}
 ), parsed AS (
   SELECT event_type,
          try_to_timestamp(ts_raw, 'yyyy-MM-dd HH:mm:ss') AS ts_ok
@@ -1849,7 +1843,8 @@ SELECT event_type,
        MIN(ts_ok) AS first_ok,
        MAX(ts_ok) AS last_ok
 FROM parsed GROUP BY event_type ORDER BY event_type
-"""
+""",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -1904,9 +1899,6 @@ def q239_calendar_eom_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lineage: the multi-counter census shape of
     /root/reference/src/mrapps/jobcount.go:22-46, keyed by derived
     calendar buckets instead of task ids."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "__q239_events"
-    )
     return spark.sql(
         """
 SELECT last_day(CAST(ts AS DATE)) AS month_end, event_type,
@@ -1917,9 +1909,10 @@ SELECT last_day(CAST(ts AS DATE)) AS month_end, event_type,
        CAST(MIN(weekofyear(ts)) AS BIGINT) AS min_week,
        COUNT(*) FILTER (WHERE make_date(year(ts), month(ts), day(ts))
                               = CAST(ts AS DATE)) AS n_rebuilt
-FROM __q239_events
+FROM {events}
 GROUP BY month_end, event_type ORDER BY month_end, event_type
-"""
+""",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -1971,16 +1964,13 @@ def q241_locf_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted intermediate keys (/root/reference/src/mr/worker.go:197-212)
     — here the fold carries the last-seen value forward instead of
     reducing a group."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "__q241_events"
-    )
     return spark.sql(
         """
 WITH feed AS (
   SELECT event_type, user_id, ts, event_id,
          CASE WHEN event_id % 5 = 0 THEN NULL
               ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END AS cents
-  FROM __q241_events
+  FROM {events}
 ), filled AS (
   SELECT event_type, cents,
          lag(cents) IGNORE NULLS OVER
@@ -1999,7 +1989,8 @@ SELECT event_type,
        CAST(SUM(coalesce(cents, prev_known, next_known, 0)) AS BIGINT)
          AS filled_cents
 FROM filled GROUP BY event_type ORDER BY event_type
-"""
+""",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -2062,15 +2053,12 @@ def q242_local_time_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/src/mrapps/mtiming.go:54-65, promoted from
     process-local time.Now() samples to corpus-wide civil-time
     analytics."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "__q242_events"
-    )
     return spark.sql(
         """
 WITH loc AS (
   SELECT event_type,
          from_utc_timestamp(ts, 'America/New_York') AS lts, ts
-  FROM __q242_events
+  FROM {events}
 )
 SELECT event_type,
        date_format(lts, 'EEEE') AS dow_name,
@@ -2080,7 +2068,8 @@ SELECT event_type,
        CAST(date_diff(HOUR, MIN(lts), MAX(lts)) AS BIGINT) AS span_h
 FROM loc GROUP BY event_type, dow_name, month_name
 ORDER BY event_type, dow_name, month_name
-"""
+""",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -2141,9 +2130,6 @@ def q244_session_policy_dynamic(
     Reference lineage: none — the reference has no temporal operators
     at all (SURVEY §2.3); this is the Spark-native capability the
     non-port argument rests on, extended to heterogeneous policies."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "__q244_events"
-    )
     fast = ", ".join(f"'{t}'" for t in FAST_SESSION_TYPES)
     return spark.sql(
         f"""
@@ -2155,7 +2141,7 @@ WITH sess AS (
                        session_window.end) AS e_us,
          COUNT(*) AS n_in_session,
          timestampdiff(MICROSECOND, MIN(ts), MAX(ts)) AS dur_us
-  FROM __q244_events
+  FROM {{events}}
   GROUP BY user_id, event_type,
            session_window(ts, CASE WHEN event_type IN ({fast})
                                    THEN '{FAST_SESSION_GAP_MINUTES} minutes'
@@ -2169,7 +2155,8 @@ SELECT event_type,
        CAST(SUM(dur_us) AS BIGINT) AS dur_mass_us,
        CAST(SUM(e_us - s_us) AS BIGINT) AS win_mass_us
 FROM sess GROUP BY event_type ORDER BY event_type
-"""
+""",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -2237,9 +2224,6 @@ def q253_null_safe_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     reducer's adjacent-key equality scan is an implicit non-null
     comparison; the null-safe forms are what it needs the moment keys
     can be NULL."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "__q253_events"
-    )
     return spark.sql(
         """
 WITH p AS (
@@ -2248,7 +2232,7 @@ WITH p AS (
               ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END AS a,
          CASE WHEN event_id % 7 = 0 THEN NULL
               ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END AS b
-  FROM __q253_events
+  FROM {events}
 )
 SELECT event_type,
        COUNT(*) AS n,
@@ -2257,7 +2241,8 @@ SELECT event_type,
        COUNT(*) FILTER (WHERE a <=> b AND a IS NULL) AS n_both_null,
        COUNT(*) FILTER (WHERE (a IS NULL) != (b IS NULL)) AS n_one_null
 FROM p GROUP BY event_type ORDER BY event_type
-"""
+""",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -2307,18 +2292,16 @@ def q256_error_safe_parse_report(
     files absolutely (/root/reference/src/mr/worker.go:174-189 kills
     the worker on any Decode error); try_parse_json is that decode
     with the blast radius shrunk from process to row."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "__q256_events"
-    )
     return spark.sql(
+        # '{{' is a literal brace: the text is a format string.
         """
 WITH feed AS (
   SELECT event_type,
-         CASE WHEN event_id % 11 = 0 THEN concat('x{', props)
+         CASE WHEN event_id % 11 = 0 THEN concat('x{{', props)
               ELSE props END AS j,
          concat(CAST(event_id AS STRING), ',', event_type, ',',
                 CAST(floor(value * 100 + 0.5) AS BIGINT)) AS line
-  FROM __q256_events
+  FROM {events}
 ), parsed AS (
   SELECT event_type,
          try_parse_json(j) AS v,
@@ -2332,7 +2315,8 @@ SELECT event_type,
        COUNT(*) FILTER (WHERE rec.et = event_type) AS n_et_ok,
        MAX(rec.id) AS max_id
 FROM parsed GROUP BY event_type ORDER BY event_type
-"""
+""",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 

@@ -636,15 +636,13 @@ def q118_khop_reachability(
     below is then a cheap no-op barrier over the stored rows)."""
     from .dedup import resolve_pairs
 
-    # Materialize the pair detection ONCE: the view is referenced twice
+    # Materialize the pair detection ONCE: the frame is referenced twice
     # in sym and sym is re-joined every recursion step — without the
     # checkpoint barrier each UnionLoop step would replay the whole
     # shingle self-join (measured minutes instead of seconds at sf0.1).
     pairs = resolve_pairs(spark, sf_dir, pairs).localCheckpoint()
-    pairs.createOrReplaceTempView("pairs_q118")
     return spark.sql(
-        "WITH RECURSIVE "
-        + _KHOP_BODY.format(pairs="pairs_q118", depth=KHOP_DEPTH)
+        "WITH RECURSIVE " + _KHOP_BODY, pairs=pairs, depth=KHOP_DEPTH
     )
 
 

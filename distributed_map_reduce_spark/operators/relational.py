@@ -1849,10 +1849,10 @@ def q119_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-customer re-scan of orders — same plan family as q9, proven by
     the sweep's no-CartesianProduct/partial-agg gates. Shared SQL body
     with the DuckDB oracle."""
-    for name in ("customer", "orders"):
-        _t(spark, sf_dir, name).createOrReplaceTempView(f"{name}_q119")
     return spark.sql(
-        _Q119_BODY.format(customer="customer_q119", orders="orders_q119")
+        _Q119_BODY,
+        customer=_t(spark, sf_dir, "customer"),
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -1977,7 +1977,6 @@ def q122_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     whenever the per-group distinct value domain is bounded (here: 5
     priorities). For unbounded domains the sketch/heavy-hitter family
     is the stated alternative."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_q122")
     # The value set is pre-DISTINCTed in a CTE rather than via
     # listagg(DISTINCT ...): in this Spark build the distinct-aggregate
     # rewrite mis-handles ListAgg's WITHIN GROUP sort child
@@ -1985,11 +1984,11 @@ def q122_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-aggregate is the same plan the rewrite would produce anyway.
     return spark.sql("""
         WITH d AS (
-          SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders_q122
+          SELECT DISTINCT o_orderstatus, o_orderpriority FROM {orders}
         ),
         c AS (
           SELECT o_orderstatus, COUNT(*) AS n_orders
-          FROM orders_q122 GROUP BY o_orderstatus
+          FROM {orders} GROUP BY o_orderstatus
         )
         SELECT d.o_orderstatus,
                listagg(d.o_orderpriority, '|')
@@ -1999,7 +1998,7 @@ def q122_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM d JOIN c USING (o_orderstatus)
         GROUP BY d.o_orderstatus, c.n_orders
         ORDER BY d.o_orderstatus
-    """)
+    """, orders=_t(spark, sf_dir, "orders"))
 
 
 Q122_ORACLE = """
@@ -2065,13 +2064,11 @@ def q112_exists_decorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; DISTINCT before the count bounds the aggregate by
     (supplier x order). Top-10 with a total tie-break order keeps the
     result deterministic for the hash gate."""
-    for name in ("lineitem", "orders", "supplier"):
-        _t(spark, sf_dir, name).createOrReplaceTempView(f"{name}_q112")
     return spark.sql(
-        _Q112_BODY.format(
-            li="lineitem_q112", orders="orders_q112",
-            supplier="supplier_q112",
-        )
+        _Q112_BODY,
+        li=_t(spark, sf_dir, "lineitem"),
+        orders=_t(spark, sf_dir, "orders"),
+        supplier=_t(spark, sf_dir, "supplier"),
     )
 
 
@@ -4252,19 +4249,17 @@ def q208_sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference lineage: none — the reference has no query language at
     all (SURVEY §2.3); declarative surface parity item like q204."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "__q208_lineitem"
-    )
     return spark.sql(
         """
-        FROM __q208_lineitem
+        FROM {lineitem}
         |> WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
         |> EXTEND l_extendedprice * (1.0 - l_discount) AS disc_price
         |> AGGREGATE COUNT(*) AS n_items,
                      ROUND(SUM(disc_price), 2) AS revenue
            GROUP BY l_returnflag, l_linestatus
         |> ORDER BY l_returnflag, l_linestatus
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -4346,25 +4341,31 @@ def q211_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     a declarative engine's analog — safely templating the QUERY
     itself — has no counterpart there (SURVEY §2.3), engine-surface
     item like q204/q205/q208."""
+    # IDENTIFIER() takes a name, so the tables are named views; both
+    # frames are analyzed (the views inlined) before the finally drops them.
     for t in ("orders", "customer"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"__q211_{t}")
-    named = spark.sql(
-        _Q211_SQL,
-        args={
-            "seg": "AUTOMOBILE",
-            "cutoff": "1996-01-01 00:00:00",
-            "orders_tbl": "__q211_orders",
-            "customer_tbl": "__q211_customer",
-        },
-    )
-    # lexical order of the ? value markers: seg (projection),
-    # seg (filter), cutoff — positional parameters bind one marker
-    # each, so seg is passed twice.
-    positional = spark.sql(
-        _q211_positional_sql(),
-        args=["HOUSEHOLD", "HOUSEHOLD", "1994-06-01 00:00:00"],
-    )
-    return named.unionAll(positional).orderBy("seg", "o_orderpriority")
+    try:
+        named = spark.sql(
+            _Q211_SQL,
+            args={
+                "seg": "AUTOMOBILE",
+                "cutoff": "1996-01-01 00:00:00",
+                "orders_tbl": "__q211_orders",
+                "customer_tbl": "__q211_customer",
+            },
+        )
+        # lexical order of the ? value markers: seg (projection),
+        # seg (filter), cutoff — positional parameters bind one marker
+        # each, so seg is passed twice.
+        positional = spark.sql(
+            _q211_positional_sql(),
+            args=["HOUSEHOLD", "HOUSEHOLD", "1994-06-01 00:00:00"],
+        )
+        return named.unionAll(positional).orderBy("seg", "o_orderpriority")
+    finally:
+        for t in ("orders", "customer"):
+            spark.catalog.dropTempView(f"__q211_{t}")
 
 
 Q211_ORACLE = """
@@ -4412,7 +4413,6 @@ def q215_listagg_topk_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     processed in one ordered pass); crash.go:45-55 concatenates values
     within a key the same way.
     """
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("__q215_orders")
     return spark.sql(
         """
         WITH ranked AS (
@@ -4423,7 +4423,7 @@ def q215_listagg_topk_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ORDER BY CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
                             DESC, o_orderkey
                  ) AS rk
-          FROM __q215_orders
+          FROM {orders}
         )
         SELECT o_orderpriority,
                listagg(CAST(o_orderkey AS STRING), ',')
@@ -4434,7 +4434,8 @@ def q215_listagg_topk_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE rk <= 5
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -4516,25 +4517,32 @@ def q216_sql_script_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mrworker.go:30-38, mrcoordinator.go:20-23); an engine-side
     scripted control plane has no counterpart there (SURVEY §2.3) —
     engine-surface item like q204/q205/q211."""
+    # The script names its tables (IDENTIFIER(q216_tbl) takes a name);
+    # both scripts have run by the time the finally drops the views.
     for t in ("orders", "customer"):
         _t(spark, sf_dir, t).createOrReplaceTempView(f"__q216_{t}")
-    spark.sql(
-        "DECLARE OR REPLACE VARIABLE q216_seg STRING DEFAULT 'BUILDING'"
-    )
-    spark.sql(
-        "DECLARE OR REPLACE VARIABLE q216_cutoff TIMESTAMP "
-        "DEFAULT TIMESTAMP '1990-01-01 00:00:00'"
-    )
-    spark.sql(
-        "DECLARE OR REPLACE VARIABLE q216_tbl STRING DEFAULT '__q216_orders'"
-    )
-    spark.sql("SET VAR q216_seg = ?", args=["MACHINERY"])
-    spark.sql("SET VAR q216_cutoff = ?", args=["1995-07-01 00:00:00"])
-    first = spark.sql(_Q216_SCRIPT)
-    spark.sql("SET VAR q216_seg = ?", args=["FURNITURE"])
-    spark.sql("SET VAR q216_cutoff = ?", args=["1993-01-01 00:00:00"])
-    second = spark.sql(_Q216_SCRIPT)
-    return first.unionAll(second).orderBy("seg")
+    try:
+        spark.sql(
+            "DECLARE OR REPLACE VARIABLE q216_seg STRING DEFAULT 'BUILDING'"
+        )
+        spark.sql(
+            "DECLARE OR REPLACE VARIABLE q216_cutoff TIMESTAMP "
+            "DEFAULT TIMESTAMP '1990-01-01 00:00:00'"
+        )
+        spark.sql(
+            "DECLARE OR REPLACE VARIABLE q216_tbl STRING"
+            " DEFAULT '__q216_orders'"
+        )
+        spark.sql("SET VAR q216_seg = ?", args=["MACHINERY"])
+        spark.sql("SET VAR q216_cutoff = ?", args=["1995-07-01 00:00:00"])
+        first = spark.sql(_Q216_SCRIPT)
+        spark.sql("SET VAR q216_seg = ?", args=["FURNITURE"])
+        spark.sql("SET VAR q216_cutoff = ?", args=["1993-01-01 00:00:00"])
+        second = spark.sql(_Q216_SCRIPT)
+        return first.unionAll(second).orderBy("seg")
+    finally:
+        for t in ("orders", "customer"):
+            spark.catalog.dropTempView(f"__q216_{t}")
 
 
 Q216_ORACLE = """
@@ -4604,17 +4612,23 @@ def q218_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lineage: mrworker.go:30-38 dispatches by argv-supplied
     app name — dynamic dispatch of the QUERY text is the declarative
     analog (SURVEY §2.3 engine-surface gap)."""
+    # The statement text lives in a variable, so its tables are named
+    # views; both statements are analyzed before the finally drops them.
     for t in ("customer", "nation", "region"):
         _t(spark, sf_dir, t).createOrReplaceTempView(f"__q218_{t}")
-    spark.sql("DECLARE OR REPLACE VARIABLE q218_stmt STRING DEFAULT ''")
-    spark.sql("SET VAR q218_stmt = ?", args=[_Q218_STMT])
-    first = spark.sql(
-        "EXECUTE IMMEDIATE q218_stmt USING 'EUROPE', 'EUROPE', 1000.0"
-    )
-    second = spark.sql(
-        "EXECUTE IMMEDIATE q218_stmt USING 'ASIA', 'ASIA', 5000.0"
-    )
-    return first.unionAll(second).orderBy("region", "n_name")
+    try:
+        spark.sql("DECLARE OR REPLACE VARIABLE q218_stmt STRING DEFAULT ''")
+        spark.sql("SET VAR q218_stmt = ?", args=[_Q218_STMT])
+        first = spark.sql(
+            "EXECUTE IMMEDIATE q218_stmt USING 'EUROPE', 'EUROPE', 1000.0"
+        )
+        second = spark.sql(
+            "EXECUTE IMMEDIATE q218_stmt USING 'ASIA', 'ASIA', 5000.0"
+        )
+        return first.unionAll(second).orderBy("region", "n_name")
+    finally:
+        for t in ("customer", "nation", "region"):
+            spark.catalog.dropTempView(f"__q218_{t}")
 
 
 Q218_ORACLE = """
@@ -4659,7 +4673,6 @@ def q224_report_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     the longhand spelling, then a 15-row projection; nothing about ALL/
     EXCEPT survives into the physical plan.
     """
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("__q224_orders")
     return spark.sql(
         """
 SELECT * EXCEPT (total_cents) FROM (
@@ -4672,12 +4685,13 @@ SELECT * EXCEPT (total_cents) FROM (
            COUNT(*) AS n,
            CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
              AS BIGINT) AS total_cents
-    FROM __q224_orders
+    FROM {orders}
     GROUP BY ALL
   )
 )
 ORDER BY ALL
-"""
+""",
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -4727,8 +4741,7 @@ def q227_conditional_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lineage: the multi-counter shape of
     src/mrapps/jobcount.go:22-46 (several counters advanced in one
     pass) expressed declaratively."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("__q227_orders")
-    return spark.sql(_Q227_STMT.format(t="__q227_orders"))
+    return spark.sql(_Q227_STMT, t=_t(spark, sf_dir, "orders"))
 
 
 _Q227_STMT = """
@@ -4771,7 +4784,6 @@ def q233_percentile_disc_report(
     the documented big-data path for unbounded group counts is the
     approximate sketch twin (sketch_price_quantiles). This is the
     correctness anchor of the discrete-quantile rung."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("__q233_orders")
     return spark.sql(
         """
 SELECT o_orderpriority,
@@ -4782,10 +4794,11 @@ SELECT o_orderpriority,
          AS p50,
        ROUND(percentile_disc(0.9) WITHIN GROUP (ORDER BY o_totalprice), 2)
          AS p90
-FROM __q233_orders
+FROM {orders}
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-"""
+""",
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -4831,15 +4844,12 @@ def q234_array_surgery(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop."""
     from ..functions.text import SPARK_TOKS_EXPR
 
-    _t(spark, sf_dir, "documents").createOrReplaceTempView(
-        "__q234_documents"
-    )
     return spark.sql(
         f"""
 WITH lens AS (
   SELECT doc_id,
          transform({SPARK_TOKS_EXPR}, x -> length(x)) AS ls
-  FROM __q234_documents
+  FROM {{documents}}
 )
 SELECT doc_id,
        forall(ls, x -> x < 40) AS all_short,
@@ -4854,7 +4864,8 @@ SELECT doc_id,
        concat_ws(',', transform(array_sort(array_distinct(ls)),
                                 x -> CAST(x AS STRING))) AS vocab
 FROM lens ORDER BY doc_id
-"""
+""",
+        documents=_t(spark, sf_dir, "documents"),
     )
 
 
@@ -4927,11 +4938,6 @@ def q237_try_arithmetic_census(
     # so a many-split cluster scan skips the exchange).
     from ..functions.partitioning import widen_for_rowlocal
 
-    widen_for_rowlocal(
-        _t(spark, sf_dir, "lineitem").select(
-            "l_returnflag", "l_orderkey", "l_partkey", "l_linenumber"
-        )
-    ).createOrReplaceTempView("__q237_lineitem")
     return spark.sql(
         f"""
 WITH big AS (
@@ -4940,7 +4946,7 @@ WITH big AS (
          (l_partkey % 5 - 2) * {Q237_B_COEF} AS b,
          try_multiply(CAST(l_linenumber AS BIGINT), {Q237_RIM_WORD})
            AS c
-  FROM __q237_lineitem
+  FROM {{lineitem}}
 ), t AS (
   SELECT l_returnflag, c,
          try_add(a, b) AS s, try_subtract(a, b) AS d
@@ -4953,7 +4959,12 @@ SELECT l_returnflag,
        COUNT(*) FILTER (WHERE c IS NULL) AS n_mul_over,
        MIN(s) AS min_sum, MAX(s) AS max_sum, MAX(c) AS max_prod
 FROM t GROUP BY l_returnflag ORDER BY l_returnflag
-"""
+""",
+        lineitem=widen_for_rowlocal(
+            _t(spark, sf_dir, "lineitem").select(
+                "l_returnflag", "l_orderkey", "l_partkey", "l_linenumber"
+            )
+        ),
     )
 
 
@@ -5014,9 +5025,6 @@ def q243_string_surgery_report(
     Reference lineage: /root/reference/src/mr/worker.go:209 — the
     reference renders every output record with fmt.Fprintf("%v %v");
     format_string is that surface made deterministic and auditable."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView(
-        "__q243_customer"
-    )
     return spark.sql(
         """
 WITH s AS (
@@ -5026,7 +5034,7 @@ WITH s AS (
          format_string('%s|%09d|%s', c_mktsegment, c_custkey,
                        left(c_name, 8)) AS rendered,
          concat(right(c_name, 3), space(2), left(c_mktsegment, 2)) AS tail
-  FROM __q243_customer
+  FROM {customer}
 )
 SELECT c_mktsegment,
        COUNT(*) AS n,
@@ -5035,7 +5043,8 @@ SELECT c_mktsegment,
        MAX(rendered) AS max_render,
        MIN(tail) AS min_tail
 FROM s GROUP BY c_mktsegment ORDER BY c_mktsegment
-"""
+""",
+        customer=_t(spark, sf_dir, "customer"),
     )
 
 
@@ -5087,13 +5096,12 @@ def q247_sequence_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     into many intermediate records (/root/reference/src/mr/worker.go:
     226-238, flatMap's contract); sequence+posexplode is that fan-out
     as a declarative generator."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("__q247_orders")
     return spark.sql(
         """
 WITH s AS (
   SELECT o_orderstatus AS st, o_orderkey,
          sequence(1, CAST(1 + o_orderkey % 5 AS INT)) AS sq
-  FROM __q247_orders
+  FROM {orders}
 )
 SELECT st, COUNT(*) AS n_rows,
        CAST(SUM(pos) AS BIGINT) AS pos_mass,
@@ -5101,7 +5109,8 @@ SELECT st, COUNT(*) AS n_rows,
        CAST(SUM(size(sq)) AS BIGINT) AS size_mass
 FROM s LATERAL VIEW posexplode(sq) AS pos, val
 GROUP BY st ORDER BY st
-"""
+""",
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -5148,8 +5157,7 @@ def q248_ranked_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lineage: the reference's sort-group-fold emits per-group
     reductions (/root/reference/src/mr/worker.go:197-212); max_by is
     that fold specialized to argmax with explicit tie discipline."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("__q248_orders")
-    return spark.sql(_Q248_STMT.format(t="__q248_orders"))
+    return spark.sql(_Q248_STMT, t=_t(spark, sf_dir, "orders"))
 
 
 # The injective ordering expression — shared by the statement template
@@ -5217,11 +5225,6 @@ def q249_json_shape_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r17: width-gated).
     from ..functions.partitioning import widen_for_rowlocal
 
-    widen_for_rowlocal(
-        _t(spark, sf_dir, "orders").select(
-            "o_orderpriority", "o_orderkey", "o_orderstatus"
-        )
-    ).createOrReplaceTempView("__q249_orders")
     return spark.sql(
         """
 WITH j AS (
@@ -5230,14 +5233,19 @@ WITH j AS (
            AS obj,
          concat('[', repeat('7,', CAST(o_orderkey % 4 AS INT)), '9]')
            AS arr
-  FROM __q249_orders
+  FROM {orders}
 )
 SELECT pri, COUNT(*) AS n,
        COUNT(DISTINCT obj) AS n_obj,
        CAST(SUM(json_array_length(arr)) AS BIGINT) AS arr_mass,
        MAX(concat_ws('|', json_object_keys(obj))) AS keys_sig
 FROM j GROUP BY pri ORDER BY pri
-"""
+""",
+        orders=widen_for_rowlocal(
+            _t(spark, sf_dir, "orders").select(
+                "o_orderpriority", "o_orderkey", "o_orderstatus"
+            )
+        ),
     )
 
 
@@ -5304,20 +5312,18 @@ def q250_luhn_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the ingest surface the engine adds — closest analog is the
     crash app's pseudo-random admission (/root/reference/src/mrapps/
     crash.go:20-33), here made deterministic and content-derived."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView(
-        "__q250_customer"
-    )
     return spark.sql(
         f"""
 WITH acct AS (
   SELECT c_mktsegment AS seg, {q250_pan_expr('STRING')} AS pan
-  FROM __q250_customer
+  FROM {{customer}}
 )
 SELECT seg, COUNT(*) AS n,
        COUNT(*) FILTER (WHERE luhn_check(pan)) AS n_valid,
        MAX(pan) AS max_pan
 FROM acct GROUP BY seg ORDER BY seg
-"""
+""",
+        customer=_t(spark, sf_dir, "customer"),
     )
 
 
@@ -5373,9 +5379,6 @@ def q251_stack_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     duality (one count per word vs one posting per document —
     /root/reference/src/mrapps/wc.go:24-29, indexer.go:21-25); stack
     makes the reshape a first-class operator."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "__q251_lineitem"
-    )
     return spark.sql(
         """
 WITH m AS (
@@ -5383,14 +5386,15 @@ WITH m AS (
          CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty,
          COUNT(*) AS n_items,
          COUNT(DISTINCT l_partkey) AS n_parts
-  FROM __q251_lineitem GROUP BY l_returnflag
+  FROM {lineitem} GROUP BY l_returnflag
 )
 SELECT flag, metric, value FROM (
   SELECT flag, stack(3, 'qty', qty, 'n_items', n_items,
                      'n_parts', n_parts) AS (metric, value)
   FROM m
 ) ORDER BY flag, metric
-"""
+""",
+        lineitem=_t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -5435,7 +5439,6 @@ def q254_regexp_extract_report(
     Reference lineage: /root/reference/src/mrapps/indexer.go:18-20 —
     FieldsFunc(unicode.IsLetter) is a regex-class tokenizer by hand;
     regexp_count/substr generalize it to arbitrary patterns."""
-    _t(spark, sf_dir, "part").createOrReplaceTempView("__q254_part")
     return spark.sql(
         """
 SELECT p_type,
@@ -5446,8 +5449,9 @@ SELECT p_type,
        COUNT(*) FILTER (WHERE regexp_substr(p_name, '[0-9]+') IS NULL)
          AS n_numberless,
        MAX(regexp_extract(p_name, '([a-z]+) ([a-z]+)', 2)) AS max_second
-FROM __q254_part GROUP BY p_type ORDER BY p_type
-"""
+FROM {part} GROUP BY p_type ORDER BY p_type
+""",
+        part=_t(spark, sf_dir, "part"),
     )
 
 
@@ -5499,11 +5503,6 @@ def q255_map_entries_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §2.5; r17: width-gated).
     from ..functions.partitioning import widen_for_rowlocal
 
-    widen_for_rowlocal(
-        _t(spark, sf_dir, "orders").select(
-            "o_orderpriority", "o_orderstatus", "o_orderkey"
-        )
-    ).createOrReplaceTempView("__q255_orders")
     return spark.sql(
         """
 WITH m AS (
@@ -5511,7 +5510,7 @@ WITH m AS (
          str_to_map(concat('st:', o_orderstatus, ',pr:', o_orderpriority,
                            ',k:', CAST(o_orderkey % 10 AS STRING)),
                     ',', ':') AS mp
-  FROM __q255_orders
+  FROM {orders}
 ), proj AS (
   SELECT pri,
          concat_ws('|', array_sort(map_keys(mp))) AS keys_sig,
@@ -5530,7 +5529,12 @@ SELECT pri, COUNT(*) AS n,
        CAST(SUM(n_short) AS BIGINT) AS short_mass,
        COUNT(DISTINCT entries_sig) AS n_sigs
 FROM proj GROUP BY pri ORDER BY pri
-"""
+""",
+        orders=widen_for_rowlocal(
+            _t(spark, sf_dir, "orders").select(
+                "o_orderpriority", "o_orderstatus", "o_orderkey"
+            )
+        ),
     )
 
 
@@ -5583,9 +5587,6 @@ def q257_radix_conv_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lineage: /root/reference/src/mr/worker.go:240 — the
     mr-X-Y intermediate naming renders task ids in decimal; conv is
     that id-rendering generalized to any radix."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView(
-        "__q257_customer"
-    )
     return spark.sql(
         """
 SELECT c_mktsegment AS seg,
@@ -5595,8 +5596,9 @@ SELECT c_mktsegment AS seg,
          AS n_bin,
        CAST(SUM(length(conv(CAST(c_custkey AS STRING), 10, 36)))
             AS BIGINT) AS b36_mass
-FROM __q257_customer GROUP BY seg ORDER BY seg
-"""
+FROM {customer} GROUP BY seg ORDER BY seg
+""",
+        customer=_t(spark, sf_dir, "customer"),
     )
 
 

@@ -720,10 +720,7 @@ def q231_bitmask_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lineage: the multi-counter single-pass shape of
     src/mrapps/jobcount.go:22-46, folded into machine words instead of
     named counters."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "__q231_orders"
-    )
-    return spark.sql(_Q231_STMT.format(t="__q231_orders"))
+    return spark.sql(_Q231_STMT, t=load_table(spark, sf_dir, "orders"))
 
 
 _Q231_STMT = """
@@ -782,8 +779,6 @@ def q221_theta_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/src/mrapps/indexer.go:21-25), here as set ALGEBRA
     over sketched id sets rather than materialized lists.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("q221_docs")
     return spark.sql(
         """
 SELECT source,
@@ -799,10 +794,11 @@ FROM (
            AS a,
          theta_sketch_agg(CASE WHEN doc_id % 3 != 0 THEN doc_id END, 15)
            AS b
-  FROM q221_docs GROUP BY source
+  FROM {docs} GROUP BY source
 )
 ORDER BY source
-"""
+""",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -2061,9 +2061,6 @@ def q238_hex_codec_fingerprint(
     ihash(key) content-addresses every intermediate record to its
     reduce bucket; here the same content-address idea is the dedup
     fingerprint itself, with an explicit codec round-trip proof."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "__q238_documents"
-    )
     return spark.sql(
         """
 WITH fp AS (
@@ -2071,7 +2068,7 @@ WITH fp AS (
          hex(text) AS hx,
          CASE WHEN doc_id % 9 = 0 THEN concat('zz', hex(text))
               ELSE hex(text) END AS hx_feed
-  FROM __q238_documents
+  FROM {documents}
 )
 SELECT source,
        COUNT(*) AS n,
@@ -2082,7 +2079,8 @@ SELECT source,
        COUNT(DISTINCT md5(text)) AS n_md5,
        MAX(length(bin(doc_id))) AS max_bits
 FROM fp GROUP BY source ORDER BY source
-"""
+""",
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2138,16 +2136,13 @@ def q240_token_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lineage: /root/reference/src/mrapps/indexer.go:21-25 —
     the indexer's per-document distinct token set, here with the full
     set-algebra toolkit instead of membership only."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "__q240_documents"
-    )
     stop = ", ".join(f"'{w}'" for w in STOPWORDS)
     return spark.sql(
         f"""
 WITH toks AS (
   SELECT lang, {SPARK_TOKS_EXPR} AS raw,
          array_distinct({SPARK_TOKS_EXPR}) AS tk
-  FROM __q240_documents
+  FROM {{documents}}
 ), alg AS (
   SELECT lang, raw, tk, array({stop}) AS stop
   FROM toks
@@ -2162,7 +2157,8 @@ SELECT lang,
        CAST(SUM(size(array_remove(raw, 'the'))) AS BIGINT) AS n_nothe,
        CAST(SUM(size(flatten(array(tk, stop)))) AS BIGINT) AS n_flat
 FROM alg GROUP BY lang ORDER BY lang
-"""
+""",
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2225,9 +2221,6 @@ def q245_content_address_report(
     Reference lineage: /root/reference/src/mr/worker.go:273-276 —
     ihash(key) as content address; sha2-256 is the grown-up version
     with a transport encoding and its round-trip proof."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "__q245_documents"
-    )
     return spark.sql(
         """
 WITH f AS (
@@ -2235,7 +2228,7 @@ WITH f AS (
          sha2(text, 256) AS sha,
          replace(base64(encode(text, 'UTF-8')), '\r\n', '') AS b64,
          base64(encode(text, 'UTF-8')) AS b64_raw
-  FROM __q245_documents
+  FROM {documents}
 )
 SELECT source, COUNT(*) AS n,
        COUNT(DISTINCT sha) AS n_sha,
@@ -2245,7 +2238,8 @@ SELECT source, COUNT(*) AS n,
        CAST(MAX(length(b64)) AS BIGINT) AS max_b64,
        MIN(sha) AS min_sha
 FROM f GROUP BY source ORDER BY source
-"""
+""",
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2293,9 +2287,6 @@ def q246_field_splice_report(
     Reference lineage: /root/reference/src/mrapps/indexer.go:21-25 —
     the indexer's FieldsFunc split is split_part's whole-string
     ancestor; the splice surfaces are its record-repair extension."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "__q246_documents"
-    )
     return spark.sql(
         """
 SELECT source, COUNT(*) AS n,
@@ -2303,8 +2294,9 @@ SELECT source, COUNT(*) AS n,
        COUNT(DISTINCT split_part(text, ' ', -1)) AS n_last,
        MAX(translate(source, 'abcdes', 'ABCDE5')) AS tr_sig,
        COUNT(DISTINCT overlay(text PLACING '@@' FROM 3 FOR 2)) AS n_ov
-FROM __q246_documents GROUP BY source ORDER BY source
-"""
+FROM {documents} GROUP BY source ORDER BY source
+""",
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2346,9 +2338,6 @@ def q252_utf8_budget_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/src/mr/worker.go:240-265 (the reference sizes its
     shuffle in bytes while its apps count words — exactly the
     byte-vs-token split this census prices)."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "__q252_documents"
-    )
     return spark.sql(
         """
 WITH s AS (
@@ -2356,7 +2345,7 @@ WITH s AS (
          CASE WHEN doc_id % 7 = 0 THEN concat('é—', text)
               ELSE text END AS t,
          doc_id
-  FROM __q252_documents
+  FROM {documents}
 )
 SELECT source, COUNT(*) AS n,
        CAST(SUM(length(t)) AS BIGINT) AS chars_mass,
@@ -2366,7 +2355,8 @@ SELECT source, COUNT(*) AS n,
        CAST(SUM(ascii(substr(t, 1, 1))) AS BIGINT) AS ascii_mass,
        MAX(lpad(CAST(doc_id AS STRING), 8, '0')) AS max_padded
 FROM s GROUP BY source ORDER BY source
-"""
+""",
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -103,15 +103,15 @@ def q71_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, tok
 
     spark.udtf.register("tokenize_name", Tokenize)
-    load_table(spark, sf_dir, "part").filter(
-        F.col("p_partkey") < UDTF_KEY_CAP
-    ).createOrReplaceTempView("__q71_part")
     return spark.sql(
         """
         SELECT p.p_partkey, t.pos, t.token
-        FROM __q71_part p, LATERAL tokenize_name(p.p_name) t
+        FROM {part} p, LATERAL tokenize_name(p.p_name) t
         ORDER BY p.p_partkey, t.pos
-        """
+        """,
+        part=load_table(spark, sf_dir, "part").filter(
+            F.col("p_partkey") < UDTF_KEY_CAP
+        ),
     )
 
 
@@ -303,9 +303,6 @@ def q204_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         " RETURNS STRING RETURN CASE WHEN d < 0.03 THEN 'LOW'"
         " WHEN d < 0.07 THEN 'MID' ELSE 'HIGH' END"
     )
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "__q204_lineitem"
-    )
     return spark.sql(
         """
         SELECT CAST(YEAR(l_shipdate) AS BIGINT) AS ship_year,
@@ -315,10 +312,11 @@ def q204_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS revenue,
                ROUND(SUM(q204_charge(l_extendedprice, l_discount, l_tax)), 2)
                  AS charge
-        FROM __q204_lineitem
+        FROM {lineitem}
         GROUP BY 1, 2
         ORDER BY 1, 2
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -373,33 +371,39 @@ def q205_sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lineage: worker.go:280-301 — reusable composition units
     in the reference are Go callables; SURVEY §2.3 "no UDAF/UDTF
     interfaces". This is the declarative table-shaped analog."""
+    # The function body names its tables, so they are named views; the
+    # invocations are inlined at analysis, before the finally drops them.
     for t in ("orders", "customer"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"__q205_{t}")
-    spark.sql(
-        """
-        CREATE OR REPLACE TEMPORARY FUNCTION q205_seg_orders(
-            seg STRING, cutoff TIMESTAMP)
-        RETURNS TABLE (o_orderpriority STRING, n_orders BIGINT,
-                       total_cents BIGINT)
-        RETURN SELECT o.o_orderpriority, COUNT(*),
-               CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT)
-        FROM __q205_orders o
-        JOIN __q205_customer c ON c.c_custkey = o.o_custkey
-        WHERE c.c_mktsegment = seg AND o.o_orderdate >= cutoff
-        GROUP BY o.o_orderpriority
-        """
-    )
-    return spark.sql(
-        """
-        SELECT 'BUILDING' AS seg, *
-        FROM q205_seg_orders('BUILDING', TIMESTAMP '1995-01-01 00:00:00')
-        UNION ALL
-        SELECT 'MACHINERY' AS seg, *
-        FROM q205_seg_orders('MACHINERY', TIMESTAMP '1995-01-01 00:00:00')
-        ORDER BY seg, o_orderpriority
-        """
-    )
+    try:
+        spark.sql(
+            """
+            CREATE OR REPLACE TEMPORARY FUNCTION q205_seg_orders(
+                seg STRING, cutoff TIMESTAMP)
+            RETURNS TABLE (o_orderpriority STRING, n_orders BIGINT,
+                           total_cents BIGINT)
+            RETURN SELECT o.o_orderpriority, COUNT(*),
+                   CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5)
+                                 AS BIGINT)) AS BIGINT)
+            FROM __q205_orders o
+            JOIN __q205_customer c ON c.c_custkey = o.o_custkey
+            WHERE c.c_mktsegment = seg AND o.o_orderdate >= cutoff
+            GROUP BY o.o_orderpriority
+            """
+        )
+        return spark.sql(
+            """
+            SELECT 'BUILDING' AS seg, *
+            FROM q205_seg_orders('BUILDING', TIMESTAMP '1995-01-01 00:00:00')
+            UNION ALL
+            SELECT 'MACHINERY' AS seg, *
+            FROM q205_seg_orders('MACHINERY', TIMESTAMP '1995-01-01 00:00:00')
+            ORDER BY seg, o_orderpriority
+            """
+        )
+    finally:
+        for t in ("orders", "customer"):
+            spark.catalog.dropTempView(f"__q205_{t}")
 
 
 Q205_ORACLE = """
@@ -496,17 +500,17 @@ def q213_udtf_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (self._key, self._n, *self._sums)
 
     spark.udtf.register("q213_power_sums", udtf(PowerSums, useArrow=True))
-    load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderkey") % Q213_MOD == 0
-    ).createOrReplaceTempView("__q213_orders")
     return spark.sql(
         """
         SELECT * FROM q213_power_sums(3, TABLE(
             SELECT o_orderpriority,
                    CAST(FLOOR(o_totalprice / 1000) AS BIGINT) AS kd
-            FROM __q213_orders))
+            FROM {orders}))
         ORDER BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders").filter(
+            F.col("o_orderkey") % Q213_MOD == 0
+        ),
     )
 
 

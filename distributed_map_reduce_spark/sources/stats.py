@@ -18,10 +18,11 @@ test): no filters, no grouping, primitive non-timestamp columns.
 
 from __future__ import annotations
 
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import TABLES
+from .tables import TABLES, session_cache
 
 
 def footer_stats(
@@ -30,10 +31,22 @@ def footer_stats(
     """COUNT(*) plus MIN/MAX of ``cols`` served from parquet footers."""
     if table not in TABLES:
         raise KeyError(f"unknown table {table!r}; known: {TABLES}")
-    ns = spark.newSession()
-    ns.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    ns.conf.set("spark.sql.sources.useV1SourceList", "")
-    df = ns.read.parquet(f"{sf_dir.rstrip('/')}/{table}.parquet")
+    cache = session_cache(spark)
+    if "footer_session" not in cache:
+        # One derived session per session. Constructing a SparkSession
+        # rebinds RDD.toDF to it, which would send every later
+        # rdd.toDF() here and keep this session alive; put it back.
+        to_df = RDD.toDF
+        try:
+            ns = spark.newSession()
+        finally:
+            RDD.toDF = to_df
+        ns.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+        ns.conf.set("spark.sql.sources.useV1SourceList", "")
+        cache["footer_session"] = ns
+    df = cache["footer_session"].read.parquet(
+        f"{sf_dir.rstrip('/')}/{table}.parquet"
+    )
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
         aggs.append(F.min(c).alias(f"min_{c}"))

@@ -31,11 +31,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Small dimension tables that are always broadcast-joinable. At SF1000
-# region/nation stay tiny; customer/supplier/part grow linearly and the
-# broadcast decision is left to AQE there.
-BROADCAST_ALWAYS = {"region", "nation"}
-
 _SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [

@@ -14,6 +14,7 @@ from distributed_map_reduce_spark.operators.events import (
     q206_variant_roundtrip,
 )
 from distributed_map_reduce_spark.operators.relational import q208_sql_pipe
+from distributed_map_reduce_spark.sources import load_table
 from distributed_map_reduce_spark.operators.sketches import (
     KMV_SKETCH_K,
     q197_kmv_distinct,
@@ -116,12 +117,13 @@ def test_sql_pipe_lowers_to_identical_ansi_plan(spark, sf_dir):
             FROM (
                 SELECT *,
                        l_extendedprice * (1.0 - l_discount) AS disc_price
-                FROM __q208_lineitem
+                FROM {lineitem}
                 WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
             )
             GROUP BY l_returnflag, l_linestatus
             ORDER BY l_returnflag, l_linestatus
-            """
+            """,
+            lineitem=load_table(spark, sf_dir, "lineitem"),
         )
         ._jdf.queryExecution()
         .optimizedPlan()

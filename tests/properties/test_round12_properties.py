@@ -99,19 +99,29 @@ def test_udtf_analyze_schema_follows_literal_arg(spark, sf_dir):
     the call's literal k — k=2 yields s1..s2, k=4 yields s1..s4 — and
     the requested partitioning means one terminate() row per priority
     without any PARTITION BY at the call site."""
-    from distributed_map_reduce_spark.operators.udaf import q213_udtf_analyze
+    from pyspark.sql import functions as F
+
+    from distributed_map_reduce_spark.operators.udaf import (
+        Q213_MOD,
+        q213_udtf_analyze,
+    )
+    from distributed_map_reduce_spark.sources import load_table
 
     # registers q213_power_sums on the session (k=3 headline invocation)
     base = q213_udtf_analyze(spark, sf_dir)
     assert base.columns == ["o_orderpriority", "n", "s1", "s2", "s3"]
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderkey") % Q213_MOD == 0
+    )
     for k in (2, 4):
         df = spark.sql(
             f"""
             SELECT * FROM q213_power_sums({k}, TABLE(
                 SELECT o_orderpriority,
                        CAST(FLOOR(o_totalprice / 1000) AS BIGINT) AS kd
-                FROM __q213_orders))
-            """
+                FROM {{orders}}))
+            """,
+            orders=orders,
         )
         assert df.columns == ["o_orderpriority", "n"] + [
             f"s{i}" for i in range(1, k + 1)
@@ -121,8 +131,9 @@ def test_udtf_analyze_schema_follows_literal_arg(spark, sf_dir):
         SELECT * FROM q213_power_sums(2, TABLE(
             SELECT o_orderpriority,
                    CAST(FLOOR(o_totalprice / 1000) AS BIGINT) AS kd
-            FROM __q213_orders))
-        """
+            FROM {orders}))
+        """,
+        orders=orders,
     ).collect()
     keys = [r["o_orderpriority"] for r in rows]
     assert sorted(keys) == sorted(set(keys)), "one row per requested partition"
@@ -135,15 +146,17 @@ def test_udtf_analyze_rejects_bad_k(spark, sf_dir):
     from pyspark.errors import AnalysisException
 
     from distributed_map_reduce_spark.operators.udaf import q213_udtf_analyze
+    from distributed_map_reduce_spark.sources import load_table
 
-    q213_udtf_analyze(spark, sf_dir)  # ensure registration + view
+    q213_udtf_analyze(spark, sf_dir)  # ensure registration
     with pytest.raises(AnalysisException):
         spark.sql(
             """
             SELECT * FROM q213_power_sums(0, TABLE(
                 SELECT o_orderpriority, CAST(1 AS BIGINT) AS kd
-                FROM __q213_orders))
-            """
+                FROM {orders}))
+            """,
+            orders=load_table(spark, sf_dir, "orders"),
         ).collect()
 
 

@@ -13,6 +13,7 @@ MULTI-batch with the union of batch directories equal to the corpus
 zero-new-batch checkpoint catch-up.
 """
 
+import contextlib
 import glob
 import os
 
@@ -21,6 +22,21 @@ from pyspark.sql import functions as F
 
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@contextlib.contextmanager
+def _views(spark, sf_dir, prefix, tables):
+    """Register ``<prefix>_<table>`` views for a name-bound statement
+    (the builders drop theirs once built) and drop them after."""
+    from distributed_map_reduce_spark.sources import load_table
+
+    for t in tables:
+        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{prefix}_{t}")
+    try:
+        yield
+    finally:
+        for t in tables:
+            spark.catalog.dropTempView(f"{prefix}_{t}")
 
 
 def test_q215_rank_cap_plans_window_group_limit(spark, sf_dir):
@@ -52,14 +68,15 @@ def test_q216_variables_constant_fold_in_registered_query(spark, sf_dir):
     )
 
     q216_sql_script_maintenance(spark, sf_dir)  # sets vars; FURNITURE last
-    inner = spark.sql(
-        """
-        SELECT COUNT(*) AS n
-        FROM IDENTIFIER(q216_tbl) o
-        JOIN __q216_customer c ON c.c_custkey = o.o_custkey
-        WHERE c.c_mktsegment = q216_seg AND o.o_orderdate >= q216_cutoff
-        """
-    )
+    with _views(spark, sf_dir, "__q216", ("orders", "customer")):
+        inner = spark.sql(
+            """
+            SELECT COUNT(*) AS n
+            FROM IDENTIFIER(q216_tbl) o
+            JOIN __q216_customer c ON c.c_custkey = o.o_custkey
+            WHERE c.c_mktsegment = q216_seg AND o.o_orderdate >= q216_cutoff
+            """
+        )
     plan = inner._jdf.queryExecution().optimizedPlan().toString()
     assert "FURNITURE" in plan and "q216_seg" not in plan, (
         "session variable no longer constant-folds in the registered shape"
@@ -113,12 +130,13 @@ def test_q218_equals_direct_parameterized_statement(spark, sf_dir):
     )
 
     via_exec = q218_execute_immediate(spark, sf_dir).collect()
-    direct = (
-        spark.sql(_Q218_STMT, args=["EUROPE", "EUROPE", 1000.0])
-        .unionAll(spark.sql(_Q218_STMT, args=["ASIA", "ASIA", 5000.0]))
-        .orderBy("region", "n_name")
-        .collect()
-    )
+    with _views(spark, sf_dir, "__q218", ("customer", "nation", "region")):
+        direct = (
+            spark.sql(_Q218_STMT, args=["EUROPE", "EUROPE", 1000.0])
+            .unionAll(spark.sql(_Q218_STMT, args=["ASIA", "ASIA", 5000.0]))
+            .orderBy("region", "n_name")
+            .collect()
+        )
     assert via_exec == direct
 
 

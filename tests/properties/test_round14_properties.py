@@ -161,6 +161,7 @@ def test_q224_shorthand_equals_longhand(spark, sf_dir):
     from distributed_map_reduce_spark.operators.relational import (
         q224_report_group_by_all,
     )
+    from distributed_map_reduce_spark.sources import load_table
 
     df = q224_report_group_by_all(spark, sf_dir)
     longhand = spark.sql(
@@ -174,12 +175,13 @@ SELECT o_orderpriority, o_orderstatus, n, avg_cents, avg_dollars FROM (
            COUNT(*) AS n,
            CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
              AS BIGINT) AS total_cents
-    FROM __q224_orders
+    FROM {orders}
     GROUP BY o_orderpriority, o_orderstatus
   )
 )
 ORDER BY o_orderpriority, o_orderstatus, n, avg_cents, avg_dollars
-"""
+""",
+        orders=load_table(spark, sf_dir, "orders"),
     )
     assert df.columns == longhand.columns
     assert [tuple(r) for r in df.collect()] == [
