@@ -1,6 +1,7 @@
 import os
 
 import pytest
+from pyspark import RDD
 
 from distributed_map_reduce_spark.session import get_spark
 
@@ -24,3 +25,16 @@ def sf_dir():
     if not os.path.isdir(SF_SMOKE):
         pytest.skip(f"test corpus {SF_SMOKE} not present on this machine")
     return SF_SMOKE
+
+
+@pytest.fixture
+def fresh(spark):
+    """A derived session with an empty temp-view catalog and no
+    registered data sources, so what earlier tests left on the fixture
+    session cannot hide a leak. Its construction rebinds
+    ``RDD.toDF``; the fixture session's binding is put back."""
+    to_df = RDD.toDF
+    try:
+        yield spark.newSession()
+    finally:
+        RDD.toDF = to_df

@@ -67,7 +67,17 @@ import glob
 import os
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
+
+
+@pytest.fixture(autouse=True)
+def _drop_probe_views(spark):
+    """Drop the views a probe registers once it has run, so none
+    outlives its test in the shared session."""
+    yield
+    for name in ("probe_docs", "probe_shingles"):
+        spark.catalog.dropTempView(name)
 
 
 def _docs(spark, sf_dir):

@@ -75,6 +75,15 @@ import pytest
 from pyspark.sql import functions as F
 
 
+@pytest.fixture(autouse=True)
+def _drop_probe_views(spark):
+    """Drop the views a probe registers once it has run, so none
+    outlives its test in the shared session."""
+    yield
+    for name in ("probe14_docs", "probe14_docs_repart"):
+        spark.catalog.dropTempView(name)
+
+
 def _docs(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
     df.createOrReplaceTempView("probe14_docs")

@@ -91,6 +91,15 @@ import pytest
 from pyspark.sql import functions as F
 
 
+@pytest.fixture(autouse=True)
+def _drop_probe_views(spark):
+    """Drop the views a probe registers once it has run, so none
+    outlives its test in the shared session."""
+    yield
+    for name in ("probe15_docs", "probe15_events", "ddw_wide", "ddw_short"):
+        spark.catalog.dropTempView(name)
+
+
 def _view(spark, sf_dir, table, name):
     df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{table}.parquet")
     df.createOrReplaceTempView(name)

@@ -61,6 +61,15 @@ import pytest
 from pyspark.sql import functions as F
 
 
+@pytest.fixture(autouse=True)
+def _drop_probe_views(spark):
+    """Drop the views a probe registers once it has run, so none
+    outlives its test in the shared session."""
+    yield
+    for name in ("probe16_docs",):
+        spark.catalog.dropTempView(name)
+
+
 def _duck(sql):
     con = duckdb.connect()
     try:

@@ -147,25 +147,29 @@ def test_correlated_table_function_limit_quirk_still_present(spark, sf_dir):
     spark.range(10).selectExpr("id", "id % 3 AS g").createOrReplaceTempView(
         "__q205_quirk_t"
     )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION __q205_quirk_top(grp BIGINT)"
-        " RETURNS TABLE (id BIGINT) RETURN SELECT id FROM __q205_quirk_t"
-        " WHERE g = grp ORDER BY id DESC LIMIT 2"
-    )
-    plain = spark.sql("SELECT * FROM __q205_quirk_top(0)").collect()
-    assert sorted(r["id"] for r in plain) == [6, 9]  # plain form: correct
+    try:
+        spark.sql(
+            "CREATE OR REPLACE TEMPORARY FUNCTION __q205_quirk_top(grp BIGINT)"
+            " RETURNS TABLE (id BIGINT) RETURN SELECT id FROM __q205_quirk_t"
+            " WHERE g = grp ORDER BY id DESC LIMIT 2"
+        )
+        plain = spark.sql("SELECT * FROM __q205_quirk_top(0)").collect()
+        assert sorted(r["id"] for r in plain) == [6, 9]  # plain form: correct
 
-    correlated = spark.sql(
-        "SELECT s.g2, f.id"
-        " FROM (SELECT DISTINCT g AS g2 FROM __q205_quirk_t) s,"
-        " LATERAL __q205_quirk_top(s.g2) f ORDER BY s.g2, f.id"
-    ).collect()
-    correct = [(0, 6), (0, 9), (1, 4), (1, 7), (2, 5), (2, 8)]
-    assert [(r["g2"], r["id"]) for r in correlated] != correct, (
-        "the correlated ORDER BY/LIMIT table-function quirk is FIXED in "
-        "this Spark build — extend q205 with the correlated form and "
-        "remove this probe"
-    )
+        correlated = spark.sql(
+            "SELECT s.g2, f.id"
+            " FROM (SELECT DISTINCT g AS g2 FROM __q205_quirk_t) s,"
+            " LATERAL __q205_quirk_top(s.g2) f ORDER BY s.g2, f.id"
+        ).collect()
+        correct = [(0, 6), (0, 9), (1, 4), (1, 7), (2, 5), (2, 8)]
+        assert [(r["g2"], r["id"]) for r in correlated] != correct, (
+            "the correlated ORDER BY/LIMIT table-function quirk is FIXED in "
+            "this Spark build — extend q205 with the correlated form and "
+            "remove this probe"
+        )
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS __q205_quirk_top")
+        spark.catalog.dropTempView("__q205_quirk_t")
 
 
 def test_streaming_theta_is_microbatch_invariant(spark, sf_dir, tmp_path):

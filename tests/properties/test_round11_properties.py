@@ -24,17 +24,23 @@ from distributed_map_reduce_spark.operators.relational import (
 from distributed_map_reduce_spark.sources import load_table
 
 
-def _register_views(spark, sf_dir):
-    for t in ("orders", "customer"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"__q211_{t}")
+@pytest.fixture
+def q211_views(spark, sf_dir):
+    """The ``__q211_*`` views the statement names, dropped after the
+    test (the builder drops its own once built)."""
+    names = {t: f"__q211_{t}" for t in ("orders", "customer")}
+    for t, name in names.items():
+        load_table(spark, sf_dir, t).createOrReplaceTempView(name)
+    yield
+    for name in names.values():
+        spark.catalog.dropTempView(name)
 
 
-def test_positional_value_binding_matches_named(spark, sf_dir):
+def test_positional_value_binding_matches_named(spark, q211_views):
     """Positional plain-value parity: the same statement bound once
     with named args and once positionally (seg twice — projection then
     filter — then cutoff, lexical marker order) must return identical
     rows. This is the form q211's second invocation ships."""
-    _register_views(spark, sf_dir)
     named = spark.sql(
         _Q211_SQL,
         args={
@@ -54,13 +60,12 @@ def test_positional_value_binding_matches_named(spark, sf_dir):
     assert len(n) > 0
 
 
-def test_identifier_rejects_positional_marker(spark, sf_dir):
+def test_identifier_rejects_positional_marker(spark, q211_views):
     """Watch-list raises-probe: a ``?`` marker inside ``IDENTIFIER()``
     is rejected at parse time in this Spark build (the binder does not
     assign positional markers to identifier positions), which is WHY
     q211's positional branch keeps view names literal. If this starts
     passing, upgrade q211 to bind table names positionally too."""
-    _register_views(spark, sf_dir)
     bad_sql = _Q211_SQL.replace(":orders_tbl", "?").replace(
         ":customer_tbl", "?"
     ).replace(":cutoff", "?").replace(":seg", "?")

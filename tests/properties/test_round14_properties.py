@@ -36,7 +36,6 @@ def test_q220_bitmaps_merge_idempotently(spark, sf_dir):
         "the all-flags rollup must be one scalar broadcast to every row"
     )
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("r14_li")
     merged = spark.sql(
         """
 SELECT CAST(SUM(bitmap_count(mb)) AS BIGINT) AS nd FROM (
@@ -44,12 +43,13 @@ SELECT CAST(SUM(bitmap_count(mb)) AS BIGINT) AS nd FROM (
     SELECT slice, bitmap_bucket_number(l_partkey) AS bkt,
            bitmap_construct_agg(bitmap_bit_position(l_partkey)) AS b
     FROM (
-      SELECT 0 AS slice, l_partkey FROM r14_li WHERE l_orderkey % 3 != 2
+      SELECT 0 AS slice, l_partkey FROM {li} WHERE l_orderkey % 3 != 2
       UNION ALL
-      SELECT 1 AS slice, l_partkey FROM r14_li WHERE l_orderkey % 3 != 0
+      SELECT 1 AS slice, l_partkey FROM {li} WHERE l_orderkey % 3 != 0
     ) GROUP BY slice, bkt
   ) GROUP BY bkt)
-"""
+""",
+        li=li,
     ).collect()[0].nd
     assert merged == want_all, "overlapping-slice OR-merge double-counted"
 
@@ -94,7 +94,6 @@ def test_q221_exact_regime_precondition_and_mergeability(spark, sf_dir):
         "nominal 32768 — q221 must move to the rows-only-with-floor "
         "family (the HLL rule)"
     )
-    docs.createOrReplaceTempView("r14_docs")
     one_shot, merged = spark.sql(
         """
 SELECT CAST(theta_sketch_estimate(theta_sketch_agg(doc_id, 15)) AS BIGINT)
@@ -102,9 +101,10 @@ SELECT CAST(theta_sketch_estimate(theta_sketch_agg(doc_id, 15)) AS BIGINT)
        (SELECT CAST(theta_sketch_estimate(theta_union_agg(s, 15)) AS BIGINT)
         FROM (SELECT doc_id % 2 AS half,
                      theta_sketch_agg(doc_id, 15) AS s
-              FROM r14_docs GROUP BY half)) AS merged
-FROM r14_docs
-"""
+              FROM {docs} GROUP BY half)) AS merged
+FROM {docs}
+""",
+        docs=docs,
     ).collect()[0]
     assert one_shot == merged, "theta sketches stopped merging exactly"
 

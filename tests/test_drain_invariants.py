@@ -1,10 +1,12 @@
 """Drain invariants: a drained streaming twin leaves nothing behind — no
 temp dir, no catalog view, no active stream, no changed session conf —
 while its stateful operators ran at the width ``state_width`` gives
-them; a drain whose stream fails cleans up the same way;
+them; a drain whose stream fails cleans up the same way; each streaming
+warm-up step warms only its own machinery and cleans up the same way;
 and the per-application scratch dirs of the persistent-checkpoint
 queries are removed by their exit hook."""
 
+import contextlib
 import os
 import tempfile
 
@@ -151,6 +153,105 @@ def test_q99_stream_delivers_every_event_twice(spark, sf_dir):
     drained = drain(at_least_once_events(spark, sf_dir), "append")
     assert drained.count() == 2 * n_events
     assert drained.select("event_id").distinct().count() == n_events
+
+
+class _StartedSources(StreamingQueryListener):
+    """Source descriptions of every query run started, by run id."""
+
+    def __init__(self):
+        self.sources = {}
+
+    def onQueryStarted(self, event):
+        self.sources.setdefault(str(event.runId), set())
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        self.sources.setdefault(str(p.runId), set()).update(
+            s.description for s in p.sources
+        )
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+def _docrange_registered(spark):
+    return (
+        spark._jsparkSession.sessionState()
+        .dataSourceManager()
+        .dataSourceExists("docrange")
+    )
+
+
+def _warm_footprint(spark):
+    return (
+        {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("dmrs_")},
+        sorted(t.name for t in spark.catalog.listTables()),
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )
+
+
+@contextlib.contextmanager
+def _active(spark):
+    """Make ``spark`` the JVM's active session. Registering a Python
+    data source checks its name against the active session's sources,
+    which are otherwise the fixture session's."""
+    jss = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = jss.getActiveSession()
+    jss.setActiveSession(spark._jsparkSession)
+    try:
+        yield
+    finally:
+        if prev.isDefined():
+            jss.setActiveSession(prev.get())
+        else:
+            jss.clearActiveSession()
+
+
+def _warm(spark, step):
+    """Run one warm-up step, checking it leaves nothing behind; return
+    the source descriptions of the queries it ran, by run id."""
+    listener = _StartedSources()
+    before = _warm_footprint(spark)
+    _flush_listener_events(spark)
+    spark.streams.addListener(listener)
+    try:
+        with _active(spark):
+            step(spark)
+        _flush_listener_events(spark)
+    finally:
+        spark.streams.removeListener(listener)
+    assert _warm_footprint(spark) == before
+    assert spark.streams.active == []
+    return listener.sources
+
+
+def test_stream_warmup_runs_only_the_jvm_file_source(fresh):
+    """The streaming warm-up drains one file-stream query and leaves the
+    Python DataSource machinery cold: docrange stays unregistered."""
+    from distributed_map_reduce_spark.streaming.warmup import (
+        warm_streaming_machinery,
+    )
+
+    assert not _docrange_registered(fresh)
+    (sources,) = _warm(fresh, warm_streaming_machinery).values()
+    assert not _docrange_registered(fresh)
+    assert sources
+    assert all(s.startswith("FileStreamSource") for s in sources)
+
+
+def test_python_source_warmup_registers_docrange(fresh):
+    from distributed_map_reduce_spark.streaming.warmup import (
+        warm_python_stream_source,
+    )
+
+    assert not _docrange_registered(fresh)
+    (sources,) = _warm(fresh, warm_python_stream_source).values()
+    assert sources
+    assert not any(s.startswith("FileStreamSource") for s in sources)
+    assert _docrange_registered(fresh)
 
 
 def test_app_scratch_dirs_removed_by_exit_hook(monkeypatch):

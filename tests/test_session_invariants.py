@@ -71,18 +71,6 @@ CROSS_FAMILY = [
 CONFS = ("spark.sql.shuffle.partitions", "spark.sql.timeType.enabled")
 
 
-@pytest.fixture
-def fresh(spark):
-    """A derived session with an empty temp-view catalog, so views left
-    by earlier tests cannot hide a leak. Its construction rebinds
-    ``RDD.toDF``; the fixture session's binding is put back."""
-    to_df = RDD.toDF
-    try:
-        yield spark.newSession()
-    finally:
-        RDD.toDF = to_df
-
-
 def _views(spark):
     return {t.name for t in spark.catalog.listTables()}
 

@@ -46,9 +46,13 @@ def test_sql_front_door(spark, sf_dir):
     from distributed_map_reduce_spark.sources import register_views
 
     register_views(spark, sf_dir)
-    spec = all_queries()["q6_segment_revenue"]
-    via_sql = spark.sql(spec.oracle).collect()
-    via_df = spec.build(spark, sf_dir).collect()
+    try:
+        spec = all_queries()["q6_segment_revenue"]
+        via_sql = spark.sql(spec.oracle).collect()
+        via_df = spec.build(spark, sf_dir).collect()
+    finally:
+        for t in TABLES:
+            spark.catalog.dropTempView(t)
     assert [tuple(r) for r in via_sql] == [tuple(r) for r in via_df]
     assert len(via_sql) > 0
 
